@@ -1,7 +1,8 @@
 """Declared query corpus.
 
-Each submodule registers queries via the shared registry decorator; the
-driver contract (__spark_entry__.py) re-exports ALL_QUERIES / ALL_ORACLES.
+Each submodule registers queries via the shared registry decorator, in
+import order; the driver contract (__spark_entry__.py) re-exports
+ALL_QUERIES / ALL_ORACLES in its computed rotation order.
 """
 
 from __future__ import annotations
@@ -9,12 +10,6 @@ from __future__ import annotations
 from .registry import ALL_ORACLES, ALL_QUERIES
 
 # Import for registration side effects.
-#
-# ORDER MATTERS: the driver's correctness gate checks registrations in
-# insertion order and has historically capped at the first ~50.  The
-# LLM-pipeline operators (dedup/ANN/multimodal/text) are the north-star
-# components, so they register FIRST; ingest and a representative
-# events/tpch slice follow; the tpch tail rotates in across rounds.
 from . import text as _text  # noqa: E402,F401  (text analysis + dedup family)
 from . import similarity as _similarity  # noqa: E402,F401  (kNN/ANN/embeddings)
 from . import multimodal as _multimodal  # noqa: E402,F401
@@ -33,508 +28,4 @@ from . import sampling as _sampling  # noqa: E402,F401  (KMV sketch/sampling)
 from . import cep as _cep  # noqa: E402,F401  (sequence pattern matching)
 from . import recsys as _recsys  # noqa: E402,F401  (item-CF recommendations)
 
-# Round-5 rotation: the driver samples the first ~50 registrations, and
-# the union r01..r04 covers 133/147 with only two non-green rows ever.
-# Priority for round 5's scarce slots, per VERDICT r4 items 1-2:
-#   (a) the two r04 `err` rows, now fixed (agg_collect_arrays emits a
-#       sortable string; text_bpe_learn gained an unrolled-CTE oracle);
-#   (b) the 14 queries no driver round ever sampled (rotation debt from
-#       the corpus growing 83->147 against the 50-row cap) -- landing
-#       these makes every registered query driver-green at least once;
-#   (c) queries NEW in round 5;
-#   (d) queries whose code paths changed in round 5;
-#   (e) backfill by oldest driver row.  Position never gates local
-# correctness: tests/test_correctness.py and tools/check_oracle.py run
-# the FULL corpus against the DuckDB oracle every round.
-_ROUND5_FRONT = [
-    # (a) r04 err rows, fixed this round
-    "agg_collect_arrays",
-    "text_bpe_learn",
-    # (b) never driver-sampled (r1-r4)
-    "multimodal_wav_decode",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_ship_delay",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_cnt",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_revenue",
-    "q20_promotable_suppliers",
-    "q21_waiting_suppliers",
-    "q22_dormant_customers",
-    "events_dedup_first_arrival",
-    # (c) new in round 5 (appended as they land)
-    "multimodal_resize_real",
-    "ingest_pruned_sink_scan",
-    "text_cms_heavy_hitters",
-    "dedup_pagerank",
-    "embedding_kmeans_lloyd",
-    "ingest_bloom_prefilter",
-    "multimodal_frame_sample_real",
-    "er_fuzzy_match_master",
-    "graph_bfs_hops",
-    "graph_kcore",
-    "text_bm25_topk",
-    "events_ewma_halflife",
-    "multimodal_audio_energy",
-    "dedup_jaccard_prefix_filter",
-    "events_time_weighted_avg",
-    "events_corr_matrix",
-    "warehouse_fk_audit",
-    "events_mutual_information",
-    "agg_trimmed_mean",
-    "privacy_k_anonymity",
-    "events_psi_drift",
-    "profile_sort_key_advisor",
-    "layout_zorder_buckets",
-    "events_conversion_paths",
-    "text_langid_eval",
-    "agg_hll_custom",
-    "agg_hll_intersection",
-    "events_time_to_convert",
-    # (d) code path edited in round 5 -> revalidate under the driver
-    "multimodal_ppm_decode",
-    "multimodal_png_decode",
-    # (e) backfill: oldest driver rows first (r02 holders)
-    "q3_shipping_priority",
-    "q4_priority_exists",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "dedup_minhash_signatures",
-    "dedup_minhash_lsh_pairs",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_metadata_stats",
-    "text_tfidf_top_terms",
-    "knn_bruteforce_cosine",
-    "ann_lsh_buckets",
-    "ann_ivf_cells",
-    "embedding_centroids",
-    "embedding_near_dup",
-    "header_extraction",
-    "ingest_parse_errors",
-    "events_json_extract",
-    "events_tumbling_hourly",
-    "events_sliding_6h_3h",
-    "events_sessionization",
-    "events_asof_last_purchase",
-    "events_asof_join_op",
-    "events_range_join_daily",
-    "events_daily_from_hourly",
-    "skew_salted_user_counts",
-    "join_salted_skew",
-    "scan_partition_pruned",
-    "q1_pricing_summary",
-    "join_right_outer_agg",
-    "join_bucketed_colocated",
-]
-
-
-def _rotate(front: list[str]) -> None:
-    missing = [n for n in front if n not in ALL_QUERIES]
-    assert not missing, f"rotation names unknown: {missing}"
-    for d in (ALL_QUERIES, ALL_ORACLES):
-        ordered = {k: d[k] for k in front if k in d}
-        ordered.update({k: v for k, v in d.items() if k not in ordered})
-        d.clear()
-        d.update(ordered)
-
-
-# Round-6 rotation, same policy as round 5: with the driver sampling the
-# first ~50 registrations and the r01..r05 union already covering all 175
-# prior queries, priority is (a) queries NEW in round 6, (b) queries whose
-# code paths changed in round 6 (ADVICE fixes: PSI width guard, ER length
-# guard, BFS bound alignment, WAV truncation guard), then (c) backfill by
-# OLDEST driver-green row (the 29 round-2 holders, then round-3 holders
-# alphabetically) so every query's driver evidence stays fresh.
-_ROUND6_FRONT = [
-    # (a) new in round 6
-    "agg_quantile_sketch",
-    "warehouse_time_travel_diff",
-    "ann_recall_scoreboard",
-    "curation_contamination_check",
-    "layout_compaction_plan",
-    "er_quality_eval",
-    "profile_skew_advisor",
-    "ingest_auto_anti_join",
-    "events_dashboard_topk",
-    "warehouse_snapshot_history",
-    "agg_quantile_bins",
-    "agg_quantile_sketch_grouped",
-    "ann_incremental_index_stats",
-    "hybrid_retrieval_rrf",
-    # (b) code path changed in round 6
-    "events_psi_drift",
-    "er_fuzzy_match_master",
-    "graph_bfs_hops",
-    "multimodal_wav_decode",
-    "multimodal_audio_energy",
-    # (c) backfill: round-2 holders (oldest driver rows)
-    "ann_ivf_cells",
-    "ann_lsh_buckets",
-    "dedup_minhash_lsh_pairs",
-    "dedup_minhash_signatures",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "embedding_centroids",
-    "embedding_near_dup",
-    "events_asof_join_op",
-    "events_asof_last_purchase",
-    "events_daily_from_hourly",
-    "events_json_extract",
-    "events_range_join_daily",
-    "events_sessionization",
-    "events_sliding_6h_3h",
-    "events_tumbling_hourly",
-    "header_extraction",
-    "ingest_parse_errors",
-    "join_bucketed_colocated",
-    "join_right_outer_agg",
-    "join_salted_skew",
-    "knn_bruteforce_cosine",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_metadata_stats",
-    "q1_pricing_summary",
-    "scan_partition_pruned",
-    "skew_salted_user_counts",
-    "text_tfidf_top_terms",
-    # (c) backfill continues: round-3 holders, alphabetically
-    "agg_approx_tolerance",
-    "agg_cube",
-    "agg_distinct_multi",
-    "agg_grouping_sets",
-    "agg_rollup",
-    "conditional_funcs",
-]
-
-_rotate(_ROUND6_FRONT)
-
-
-# Round-7 rotation, same policy: (a) the two r6 hash-red rows, FIXED this
-# round (decimal outputs canonicalized) -- driver-green evidence for the
-# fix is the round's headline; (b) queries NEW in round 7 (table-format
-# completions, profiling, contracts, KMV, CEP, BPE encode, skipping,
-# splits, robust stats); (c) code paths changed in round 7 (quantile-walk
-# plan fix, BPE learn refactor, partitioned-layout sharing, ANN-index
-# dedup + sink-root reuse); (d) backfill by OLDEST driver evidence
-# (r3/r4 holders, alphabetically). Position never gates local
-# correctness: the full corpus runs against DuckDB every round.
-_ROUND7_FRONT = [
-    # (a) the fixed pair -- the only driver-red rows ever
-    "warehouse_time_travel_diff",
-    "warehouse_snapshot_history",
-    # (b) new in round 7
-    "warehouse_time_travel_ts",
-    "warehouse_time_travel_bucketed",
-    "warehouse_incremental_matview",
-    "warehouse_incremental_minmax",
-    "warehouse_change_data_feed",
-    "warehouse_change_log",
-    "warehouse_view_from_cdf",
-    "warehouse_change_feed_bucketed",
-    "warehouse_scd2_from_cdf",
-    "warehouse_pseudonymize",
-    "warehouse_bloom_skip_lookup",
-    "scan_dynamic_partition_pruned",
-    "profile_quantile_columns",
-    "profile_hll_columns",
-    "agg_parquet_footer_stats",
-    "expectations_orders_audit",
-    "expectations_quarantine_rows",
-    "agg_kmv_distinct_events",
-    "agg_kmv_sample_users",
-    "events_kmv_grouped_sample",
-    "stream_kmv_distinct_events",
-    "events_sequence_funnel_regex",
-    "events_markov_transitions",
-    "text_bpe_encode_stats",
-    "curation_leakage_safe_split",
-    "text_sparse_cosine_topk",
-    "events_winsorized_stats",
-    "warehouse_dml_delete_update",
-    "stream_cep_funnel_regex",
-    "stream_expectations_metrics",
-    "warehouse_spec_evolution",
-    "events_anomaly_rolling_zscore",
-    "orders_item_cf_recs",
-    "ann_filtered_topk",
-    "profile_join_cardinality_cms",
-    "text_pmi_collocations",
-    "ann_jl_distortion",
-    "curation_dsir_weights",
-    "er_fellegi_sunter",
-    "text_textrank_keywords",
-    "privacy_dp_noisy_counts",
-    "agg_kmv_set_ops",
-    "dedup_incremental_index_stats",
-    "events_bootstrap_ci",
-    "embedding_dbscan_clusters",
-    "retrieval_quality_eval",
-    "dedup_exact_substr_spans",
-    "events_attribution_models",
-    "curation_hard_negatives",
-    "events_ab_test_zstat",
-    "events_cusum_changepoints",
-    # (c) code paths changed in round 7
-    "agg_quantile_sketch",
-    "agg_quantile_sketch_grouped",
-    "agg_quantile_bins",
-    "text_bpe_learn",
-    "scan_partition_pruned",
-    "ann_incremental_index_stats",
-    # (d) backfill: oldest driver evidence (r3/r4 rows), alphabetically
-    "agg_equidepth_histogram",
-    "agg_exact_moments",
-    "agg_mad_robust",
-    "agg_percentiles",
-    "agg_price_histogram",
-    "ann_index_build_stats",
-    "ann_ivf_sq8_topk",
-    "ann_pq_rerank",
-    "ann_pq_topk",
-    "ann_rrf_fusion",
-    "ann_sq8_topk",
-    "dedup_containment_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_triangle_counts",
-    "docs_chunk_windows",
-]
-
-_rotate(_ROUND7_FRONT)
-
-
-# Round-9 rotation (the round-8 rotation was MISSED -- VERDICT r8's top
-# finding: CORRECTNESS_r08's 50-row sample was key-identical to r07's, so
-# the entire round-8 surface has zero driver evidence).  Priority:
-#   (a) the 25 queries NEVER driver-sampled in any round (all 22 round-8
-#       additions plus the 3 r7 entries that fell past the 50-row cap:
-#       curation_hard_negatives, events_ab_test_zstat,
-#       events_cusum_changepoints) -- exactly the list in VERDICT r8;
-#   (b) queries NEW in round 9, appended as they land;
-#   (c) code paths changed in round 9 (duplicate-payments positive
-#       control, DSAR scan sharing, sparse-cosine posting truncation);
-#   (d) backfill by OLDEST driver evidence (round-3 holders, alpha).
-# tests/test_rotation_debt.py now machine-checks (a): every registered
-# query must appear in the first 50 or in some CORRECTNESS_r*.json.
-_ROUND9_FRONT = [
-    # (a) never driver-sampled, ever (VERDICT r8 item #1)
-    "curation_hard_negatives",
-    "events_ab_test_zstat",
-    "events_cusum_changepoints",
-    "events_mad_anomaly",
-    "events_survival_km",
-    "events_theil_sen_trend",
-    "events_ks_drift",
-    "events_cumulative_distinct",
-    "events_calibration_ece",
-    "warehouse_forget_keys",
-    "warehouse_clone_diff",
-    "warehouse_schema_evolution",
-    "warehouse_merge_into",
-    "warehouse_zorder_skipping",
-    "warehouse_rendezvous_resharding",
-    "warehouse_ivm_join_view",
-    "warehouse_subject_access_report",
-    "privacy_l_diversity",
-    "quality_benford_audit",
-    "privacy_dp_median",
-    "orders_gini_concentration",
-    "orders_pareto_frontier",
-    "orders_duplicate_payments",
-    "text_bpe_fertility_by_lang",
-    "curation_mixture_allocation",
-    # (b) new in round 9
-    "graph_clustering_coeff",
-    "graph_label_propagation",
-    "graph_hits_scores",
-    "events_seasonal_decompose",
-    "agg_tukey_fences",
-    "profile_fd_candidates",
-    "warehouse_table_diff",
-    "text_bigram_lm_score",
-    "curation_blocklist_filter",
-    "docs_shard_overlap_audit",
-    "privacy_t_closeness",
-    "events_conformal_threshold",
-    "dedup_lsh_tuning_curve",
-    "embedding_drift_audit",
-    "warehouse_pit_join",
-    "orders_theil_inequality",
-    "events_forecast_backtest",
-    "text_novelty_curve",
-    # (b, continued) second round-9 session: the statistics/profiling
-    # wave.  These 7 bring the never-driver-sampled set to EXACTLY the
-    # front-50, so CORRECTNESS_r09 covers all of (a)+(b) and nothing
-    # with prior evidence occupies a scarce slot.
-    "graph_adamic_adar",
-    "events_spearman_corr",
-    "events_acf_lags",
-    "events_fdr_bh",
-    "agg_mann_whitney",
-    "profile_ind_candidates",
-    "curation_neyman_allocation",
-    # (c) code paths changed in round 9 (array-pair dots; basket cap 128)
-    "text_sparse_cosine_topk",
-    "orders_item_cf_recs",
-    # (d) backfill: oldest driver evidence (r3 holders), alphabetically
-    "agg_distinct_multi",
-    "agg_grouping_sets",
-    "agg_rollup",
-    "conditional_funcs",
-]
-
-_rotate(_ROUND9_FRONT)
-
-
-# Round-10 rotation. Rotation debt is ZERO entering the round
-# (CORRECTNESS_r09 covered exactly the 50 never-sampled queries), so
-# per VERDICT r9 item #4 the front-50 is spent on EVIDENCE FRESHNESS:
-#   (a) queries NEW in round 10, appended as they land (the Misra-Gries
-#       promotion pair first -- VERDICT r9 item #3 -- then the
-#       training-data-assembly wave);
-#   (b) code paths CHANGED in round 10 (the ADVICE fixes: ACF floor
-#       bucketing, IND null-symmetry on the planted leg);
-#   (c) backfill by OLDEST driver evidence -- 47 queries last sampled
-#       in round 3, ~25k LoC ago (all re-verified on current code by
-#       every full local gate since; this refreshes the DRIVER record).
-# The list stays <= 50 entries; _rotate puts everything else after it
-# in prior order, so displaced entries all carry driver evidence.
-_ROUND10_FRONT = [
-    # (a) new in round 10
-    "text_mg_heavy_hitters",
-    "text_mg_merge_shards",
-    "pipeline_pack_sequences",
-    "pipeline_pack_ffd_bins",
-    "curation_quality_battery",
-    "curation_pii_scrub",
-    "warehouse_dsar_bucketed",
-    "pipeline_assembly_e2e",
-    "agg_kruskal_wallis",
-    "agg_chi_square_independence",
-    # (b) code changed in round 10
-    "events_acf_lags",
-    "profile_ind_candidates",
-    # (c) backfill: oldest driver evidence (round-3 rows), alphabetical
-    "agg_distinct_multi",
-    "agg_grouping_sets",
-    "agg_rollup",
-    "conditional_funcs",
-    "dedup_clusters",
-    "dedup_exact_groups",
-    "dedup_exact_survivors_count",
-    "dedup_simhash_pairs_wide",
-    "dedup_survivor_stats",
-    "docs_balanced_sample",
-    "docs_stratified_split",
-    "docs_token_shards",
-    "embedding_near_dup_lsh",
-    "ingest_idempotent",
-    "ingest_incremental",
-    "ingest_point_lookup",
-    "ingest_shuffle_anti_join",
-    "ingest_via_datasource",
-    "join_anti_not_exists",
-    "join_cross_theta",
-    "join_full_outer",
-    "join_left_outer_agg",
-    "join_semi_exists",
-    "pivot_status_by_priority",
-    "q14_promo_revenue",
-    "q18_large_volume",
-    "q5_local_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "scalar_array_map_funcs",
-    "scalar_date_funcs",
-    "scalar_math_funcs",
-    "scalar_string_funcs",
-    "set_ops",
-    "sort_topk_global",
-    "stream_stateful_user_counts",
-    "subquery_in",
-    "subquery_scalar_corr",
-]
-
-_rotate(_ROUND10_FRONT)
-
-# Round-11 rotation. Rotation debt ZERO entering the round (r01-r10
-# driver-green union = 297/297). Front-50 spends on:
-#   (a) queries NEW in round 11 (the model-based-curation wave:
-#       linear quality classifier, perceptual-hash image near-dup,
-#       unigram-LM tokenizer prune);
-#   (b) queries whose OUTPUT or PLAN changed in round 11 (straddler
-#       semantics + n_whole column, the HOF-hazard fixes, the HITS
-#       shuffle-hash fixed-point, the FS size-picked names join, the
-#       single-sidecar-read DSAR bloom probe);
-#   (c) backfill by OLDEST driver evidence: all 9 remaining r3-era rows
-#       + the first 26 r4-era rows alphabetically (20 r4 rows remain
-#       for round 12 — 5 slots yielded to the second-session
-#       web-corpus wave, displacing rows that keep r4 evidence).
-_ROUND11_FRONT = [
-    # (a) new in round 11
-    "curation_quality_classifier",
-    "multimodal_dhash_near_dup",
-    "text_unigram_tokenizer",
-    # (a') new in round 11's second session (web-corpus wave); the three
-    # displaced (c) rows at the tail all hold r4 driver evidence and
-    # rejoin the r12 backfill with the other 15 r4-era rows
-    "curation_line_dedup",
-    "curation_html_extract",
-    "graph_ppr_seed_expand",
-    "webcorpus_link_rank",
-    "curation_data_budget",
-    # (b) output/plan changed in round 11
-    "pipeline_pack_sequences",
-    "pipeline_assembly_e2e",
-    "text_novelty_curve",
-    "text_repetition_scores",
-    "graph_hits_scores",
-    "er_fellegi_sunter",
-    "warehouse_dsar_bucketed",
-    # (c) backfill: oldest driver evidence (9 x r3, then r4 alphabetical)
-    "text_bpe_token_stats",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality_scores",
-    "text_token_stats",
-    "window_lag_lead",
-    "window_ntile_stats",
-    "window_rank_topn",
-    "window_running_sum",
-    "agg_equidepth_histogram",
-    "agg_exact_moments",
-    "agg_mad_robust",
-    "agg_percentiles",
-    "agg_price_histogram",
-    "ann_index_build_stats",
-    "ann_ivf_sq8_topk",
-    "ann_pq_rerank",
-    "ann_pq_topk",
-    "ann_rrf_fusion",
-    "ann_sq8_topk",
-    "dedup_containment_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_triangle_counts",
-    "docs_chunk_windows",
-    "docs_contamination_check",
-    "docs_curated_pipeline",
-    "docs_domain_mixture",
-    "docs_epoch_shuffle",
-    "docs_repeated_chunks",
-    "docs_weighted_sample",
-    "docs_weighted_sample_noreplace",
-    "embedding_dup_clusters",
-    "events_anomaly_zscore",
-    "events_cohort_retention",
-    "events_funnel_conversion",
-]
-
-_rotate(_ROUND11_FRONT)
-
 __all__ = ["ALL_QUERIES", "ALL_ORACLES"]
-

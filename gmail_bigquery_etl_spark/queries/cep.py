@@ -120,21 +120,11 @@ def stream_cep_funnel_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the real snapshot-pointer sink (streaming/cep.
     apply_cep_batch). The final match view must equal
     events_sequence_funnel_regex -- same oracle, verbatim."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    from ..fixtures import fresh_dir
     from ..streaming.cep import apply_cep_batch, cep_match_view
 
     ev = load_table(spark, sf_dir, "events")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_sinks_{os.getpid()}",
-        f"cep_{tag}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_dir("cep", sf_dir)
     lab = label_expr("event_type", LABELS)
     for i in range(3):
         apply_cep_batch(

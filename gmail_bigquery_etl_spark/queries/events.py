@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..catalog import load_table
+from ..fixtures import cached_dir, fresh_dir
 from .registry import query
 
 
@@ -669,41 +670,23 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _events_parted_layout(spark: SparkSession, sf_dir: str) -> str:
     """Hive-style events layout (.../event_type=X/), built once per
-    session and shared by the static- and dynamic-pruning queries;
-    returns the published dir."""
-    import hashlib
-    import os
-    import shutil
-    import uuid
+    process and shared by the static- and dynamic-pruning queries;
+    returns its dir."""
 
-    ev = load_table(spark, sf_dir, "events")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    out = os.path.join(
-        wh, f"ev_parted_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    if not os.path.isdir(out):
-        # session-unique tmp: two racing sessions must never share a
-        # staging dir, or the winner could publish the loser's half-write
-        tmp = f"{out}.tmp-{uuid.uuid4().hex[:8]}"
+    def _build(out: str) -> None:
         # project to the needed columns and co-locate each partition's rows
         # before writing: one file per event_type directory, not one per
         # (task x partition)
         (
-            ev.select("user_id", "value", "event_type")
+            load_table(spark, sf_dir, "events")
+            .select("user_id", "value", "event_type")
             .repartition("event_type")
             .write.mode("overwrite")
             .partitionBy("event_type")
-            .parquet(tmp)
+            .parquet(out)
         )
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            # Two sessions raced to build the same layout and the other
-            # published first: first-writer-wins, read the published copy.
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(out):
-                raise
-    return out
+
+    return cached_dir("ev_parted", sf_dir, _build)
 
 
 @query(
@@ -831,25 +814,11 @@ def stream_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     state must equal: state totals accumulate in scaled int64, so the
     result is order-independent and decimal-exact, and ties on ts break by
     event_id inside the operator exactly as in the oracle's ORDER BY."""
-    import glob
     import os
-    import shutil
-    import uuid
 
     from ..streaming.stateful import running_user_counts
 
-    import time
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    # Reap only AGED prior-run dirs: a concurrent session's in-flight
-    # stream (sink + checkpoint) must not be deleted out from under it.
-    for stale in glob.glob(os.path.join(wh, "stateful_twin_*")):
-        try:
-            if time.time() - os.path.getmtime(stale) > 3600:
-                shutil.rmtree(stale, ignore_errors=True)
-        except OSError:
-            pass
-    run_dir = os.path.join(wh, f"stateful_twin_{uuid.uuid4().hex[:8]}")
+    run_dir = fresh_dir("stateful_twin", sf_dir)
     sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
 
     path = os.path.join(sf_dir, "events.parquet")

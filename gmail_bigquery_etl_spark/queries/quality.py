@@ -155,21 +155,13 @@ def stream_expectations_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write path's metrics are the same single-scan audit the batch
     operator computes, per batch, with partition discovery recovering
     the batch id."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
+    from ..fixtures import fresh_dir
     from ..operators.expectations import expectations_writer
 
     orders = load_table(spark, sf_dir, "orders")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_sinks_{os.getpid()}",
-        f"expect_{tag}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_dir("expect", sf_dir)
     writer = expectations_writer(root, orders_contracts())
     for b in range(3):
         writer(orders.where(F.col("o_orderkey") % 3 == b), b)

@@ -106,21 +106,11 @@ def stream_kmv_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     state's estimate must equal the one-shot batch build's. Proves the
     merge contract (bottom-k of union == bottom-k of merged bottom-k's)
     on the production write path, not just in pytest."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    from ..fixtures import fresh_dir
     from ..streaming.kmv import apply_kmv_batch, read_kmv
 
     ev = load_table(spark, sf_dir, "events")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_sinks_{os.getpid()}",
-        f"kmv_{tag}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_dir("kmv", sf_dir)
     for i in range(3):
         apply_kmv_batch(
             spark,

@@ -1008,32 +1008,22 @@ def ann_incremental_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_ivf_cells' one-shot relational assignment. Proves the
     production index-growth path (new vectors never re-scan old ones)
     computes the same index a from-scratch build would."""
+    from ..fixtures import fresh_dir
     from ..streaming.ann_index import (
         apply_index_batch,
         read_index,
         train_quantizer,
     )
-    from .warehouse import _sink_root
 
     emb = load_table(spark, sf_dir, "embeddings")
 
-    # UN-GAMED (VERDICT r11 item #1): the incremental index-growth path
-    # (quantizer training + two-batch apply) IS the gated operator; it
-    # runs inside the timed region every invocation.
-    def _build(root: str) -> None:
-        import os
-
-        os.makedirs(root, exist_ok=True)
-        train_quantizer(emb, root)
-        apply_index_batch(
-            spark, emb.where(F.col("vec_id") % 2 == 0), 0, root
-        )
-        apply_index_batch(
-            spark, emb.where(F.col("vec_id") % 2 == 1), 1, root
-        )
-
-    root = _sink_root("ivf_index", sf_dir)
-    _build(root)
+    # the incremental index-growth path (quantizer training + two-batch
+    # apply) IS the gated operator: a fresh dir, so it runs inside the
+    # timed region every invocation
+    root = fresh_dir("ivf_index", sf_dir)
+    train_quantizer(emb, root)
+    apply_index_batch(spark, emb.where(F.col("vec_id") % 2 == 0), 0, root)
+    apply_index_batch(spark, emb.where(F.col("vec_id") % 2 == 1), 1, root)
     return (
         read_index(spark, root)
         .groupBy("cell")

@@ -1620,27 +1620,17 @@ def dedup_incremental_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     face (find_near_dup_candidates == batch LSH candidate set) and the
     replay/overlap/restart contracts are pytest-pinned
     (tests/test_streaming.py)."""
+    from ..fixtures import fresh_dir
     from ..streaming.dedup_index import apply_dedup_batch, read_dedup_index
-    from .warehouse import _sink_root
 
     corpus = _augmented_corpus(load_table(spark, sf_dir, "documents"))
 
-    # UN-GAMED (VERDICT r11 item #1): the incremental ingest-dedup path
-    # (two-batch index maintenance) IS the gated operator; it runs
-    # inside the timed region every invocation.
-    def _build(root: str) -> None:
-        import os
-
-        os.makedirs(root, exist_ok=True)
-        apply_dedup_batch(
-            spark, corpus.where(F.col("doc_id") % 2 == 0), 0, root
-        )
-        apply_dedup_batch(
-            spark, corpus.where(F.col("doc_id") % 2 == 1), 1, root
-        )
-
-    root = _sink_root("lsh_index", sf_dir)
-    _build(root)
+    # the incremental ingest-dedup path (two-batch index maintenance) IS
+    # the gated operator: a fresh dir, so it runs inside the timed region
+    # every invocation
+    root = fresh_dir("lsh_index", sf_dir)
+    apply_dedup_batch(spark, corpus.where(F.col("doc_id") % 2 == 0), 0, root)
+    apply_dedup_batch(spark, corpus.where(F.col("doc_id") % 2 == 1), 1, root)
     idx = read_dedup_index(spark, root)
     from pyspark.sql import Window as W
 

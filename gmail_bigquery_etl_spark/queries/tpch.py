@@ -143,29 +143,27 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed sides (asserted in tests/test_bucketing.py). Result is
     identical to the plain join oracle -- bucketing is pure layout."""
     import hashlib
-    import os
-    import shutil
 
+    from ..fixtures import fresh_dir
     from ..plans.bucketing import write_bucketed
 
-    def _fresh(table: str) -> None:
-        # a previous SESSION may have left the managed location on disk
-        # while this session's in-memory catalog has no such table --
-        # saveAsTable refuses that; sweep the orphan location first
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(os.path.join(wh, table), ignore_errors=True)
-
-    # one bucketed materialization per sf_dir (idempotent within a session)
+    # one bucketed materialization per sf_dir and session, written as
+    # EXTERNAL tables under fresh fixture dirs, so no managed location
+    # outlives the session's in-memory catalog
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     ct, ot = f"bq_customer_{tag}", f"bq_orders_{tag}"
     if not spark.catalog.tableExists(ct):
-        _fresh(ct)
         c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-        write_bucketed(c.withColumnRenamed("c_custkey", "k"), ct, "k", buckets=8)
+        write_bucketed(
+            c.withColumnRenamed("c_custkey", "k"), ct, "k", buckets=8,
+            path=fresh_dir("bq_customer", sf_dir),
+        )
     if not spark.catalog.tableExists(ot):
-        _fresh(ot)
         o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
-        write_bucketed(o.withColumnRenamed("o_custkey", "k"), ot, "k", buckets=8)
+        write_bucketed(
+            o.withColumnRenamed("o_custkey", "k"), ot, "k", buckets=8,
+            path=fresh_dir("bq_orders", sf_dir),
+        )
     c, o = spark.table(ct), spark.table(ot)
     return (
         c.join(o, "k")

@@ -14,8 +14,13 @@ contract on Spark's DataSourceWriter API:
   ``fail_fast=true``,
 * optional ``throttle_ms`` between chunks (the reference's rate limit),
 * ``commit()`` on the driver aggregates per-task messages into a
-  _SUCCESS-style manifest so partial failures are observable data, not
-  silent loss.
+  _SUCCESS-style manifest of THAT commit, so partial failures are
+  observable data, not silent loss.
+
+The committed data is the set of ``*.jsonl`` files in the sink directory;
+every append adds its files there. ``_MANIFEST.json`` describes only the
+latest commit (its files, rows written and batches failed) and is
+rewritten by each append.
 
 At cluster scale each task streams its chunks independently -- the
 reference's single-threaded 1000-rows-per-second ceiling becomes
@@ -50,7 +55,8 @@ class BatchedSinkWriter(DataSourceWriter):
     commit message is simply not in the winning set, and its staging dir is
     swept by commit()/abort(). Readers globbing ``*.jsonl`` see exactly the
     committed files (``_staging`` is underscore-hidden from Spark/Hive
-    readers anyway); ``_MANIFEST.json`` stays the authoritative listing."""
+    readers anyway). ``_MANIFEST.json`` describes the latest commit only,
+    not the directory's contents."""
 
     def __init__(self, options: dict) -> None:
         self.path = options["path"]

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..fixtures import cached_dir
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,12 +99,10 @@ def partitioned_sink_path(spark: SparkSession, sf_dir: str) -> str:
     table (id, ingest_date=date(ts), one directory per day) -- the layout
     a production sink needs for the partition-pruned incremental id scan
     (SURVEY.md §7.3 item 5). Content is deterministic per sf_dir, so the
-    write happens once and is reused (guarded by _SUCCESS)."""
-    import os
+    write happens once per process and is reused (fixtures.cached_dir,
+    keyed by the full sf_dir path)."""
 
-    name = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join("spark-warehouse", f"pruned_sink_{name}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def _build(path: str) -> None:
         ev = _load_events(spark, sf_dir)
         (
             ev.filter(F.col("event_id") % 3 == 0)
@@ -116,4 +115,5 @@ def partitioned_sink_path(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .parquet(path)
         )
-    return path
+
+    return cached_dir("pruned_sink", sf_dir, _build)

@@ -114,3 +114,20 @@ def test_abort_sweeps_staging(spark, tmp_path):
     w.abort([msg])
     assert not os.path.exists(os.path.join(out, "_staging"))
     assert not [f for f in os.listdir(out) if f.endswith(".jsonl")]
+
+
+def test_manifest_describes_latest_commit_only(spark, tmp_path):
+    """``_MANIFEST.json`` is rewritten by every append and describes that
+    commit alone; the committed data is every ``*.jsonl`` in the sink."""
+    df = _records(spark)
+    first, second = df.limit(150).coalesce(1), df.limit(40).coalesce(1)
+    out = str(tmp_path / "sink")
+    _write(spark, first, out, batch_size=100)
+    files_1 = set(_manifest(out)["files"])
+    _write(spark, second, out, batch_size=100)
+    m = _manifest(out)
+    assert len(files_1) == 2 and len(m["files"]) == 1
+    assert m["rows_written"] == 40 and not set(m["files"]) & files_1
+    on_disk = {f for f in os.listdir(out) if f.endswith(".jsonl")}
+    assert on_disk == files_1 | set(m["files"])
+    assert _read_back(spark, out).count() == 190

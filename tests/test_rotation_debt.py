@@ -1,11 +1,12 @@
 """Rotation-debt lint (VERDICT r8 item #2).
 
-The driver's correctness gate samples the FIRST ~50 registered queries
-each round.  Rounds 5-7 rotated never-sampled queries forward; round 8
-forgot, so all 25 round-8-era queries accumulated zero driver evidence.
-This test makes that omission impossible to repeat: every registered
-query must either sit inside the current front-50 (so THIS round's
-driver run covers it) or already have a row in some CORRECTNESS_r*.json.
+The driver's correctness gate samples the FIRST ~50 queries of
+``__spark_entry__.queries()``, whose order is computed by
+``__spark_entry__.driver_order`` (never driver-sampled first, then the
+oldest driver evidence). This test pins the invariant that order exists
+for: every registered query either sits inside the current front-50 (so
+the next driver run covers it) or already has a row in some
+CORRECTNESS_r*.json.
 """
 
 from __future__ import annotations
@@ -28,24 +29,27 @@ def _driver_green_union() -> set[str]:
 
 
 def test_no_rotation_debt():
-    from gmail_bigquery_etl_spark.queries import ALL_QUERIES
+    import __spark_entry__
 
-    names = list(ALL_QUERIES)
+    names = list(__spark_entry__.queries())
     front = set(names[:DRIVER_SAMPLE])
     union = _driver_green_union()
     debt = [n for n in names if n not in front and n not in union]
     assert not debt, (
         f"{len(debt)} registered queries have no driver CORRECTNESS row and "
-        f"are not in the current front-{DRIVER_SAMPLE} rotation -- add them "
-        f"to the newest _ROUND*_FRONT in queries/__init__.py: {debt}"
+        f"fall outside the front-{DRIVER_SAMPLE} of __spark_entry__.queries() "
+        f"-- more never-sampled queries than one driver run covers: {debt}"
     )
 
 
 def test_front_has_no_duplicates():
-    from gmail_bigquery_etl_spark.queries import ALL_QUERIES
+    import __spark_entry__
 
-    names = list(ALL_QUERIES)
+    names = list(__spark_entry__.queries())
     assert len(names) == len(set(names))
+    assert list(__spark_entry__.oracle_sql()) == [
+        n for n in names if n in __spark_entry__.oracle_sql()
+    ]
 
 
 def test_duplicate_payments_positive_control(spark):
