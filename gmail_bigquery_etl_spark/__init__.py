@@ -1,19 +1,22 @@
 """PySpark-native analytics/ETL engine with the query and data-processing
-capabilities of ``lanafrenzel/gmail-bigquery-etl`` (reference read-only at
-/root/reference), re-expressed Spark-first.
+capabilities of ``lanafrenzel/gmail-bigquery-etl``, re-expressed
+Spark-first.
 
 Layout:
   session     -- SparkSession factory tuned for local testing + cluster scale
   schemas     -- the one email schema (reference etl_service/main.py:196-204)
                  plus fixture-table schemas
   catalog     -- fixture-table loader / temp-view registration
+  fixtures    -- the per-process root every query fixture directory lives in
   functions/  -- column-level helpers (header extraction HOFs, text, vectors)
   operators/  -- incremental ingest, dedup family, similarity search, asof
-  sources/    -- Gmail-shaped paginated Python DataSource with pushdown
-  sinks/      -- batched idempotent append sink (foreachBatch-style)
-  pipeline    -- end-to-end incremental ingest (reference /fetch parity)
-  streaming/  -- watermarked window aggregations over the events stream
-  queries/    -- declared query corpus with DuckDB-oracle SQL strings
+  sources/    -- Gmail-shaped paginated Python DataSource with pushdown, and
+                 the batched idempotent append sink
+  plans/      -- bucketed tables and physical-plan inspection
+  streaming/  -- Structured Streaming: windowed aggregations, foreachBatch
+                 ingest, and the snapshot-pointer sinks (snapshots.py)
+  queries/    -- declared query corpus with DuckDB-oracle SQL strings;
+                 queries/pipeline.py holds the training-pipeline queries
 """
 
 __version__ = "0.1.0"

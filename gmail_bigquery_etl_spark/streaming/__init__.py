@@ -14,6 +14,9 @@ batched insert, sleep-based throttling -- reference etl_service/main.py:
 * stateful   -- applyInPandasWithState custom operator (per-key running
                 aggregation with timeout), the Spark-native form of the
                 reference's in-memory per-user accumulation (main.py:158-214).
+* snapshots  -- the snapshot-pointer commit (replay guard, atomic pointer
+                swap) and the foreachBatch starter every streaming twin
+                (merge_sink, matview, sketches, indexes) shares.
 """
 
 from .replay import replay_events_stream, write_replay_dir

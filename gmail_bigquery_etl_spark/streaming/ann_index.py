@@ -8,8 +8,8 @@ faiss/SCaNN deployment): the COARSE QUANTIZER is trained offline on a
 representative sample and then FROZEN (retraining it would silently
 re-shuffle every existing assignment), while the ASSIGNMENT TABLE
 (vector -> cell) grows online, one micro-batch at a time. This module
-implements exactly that split on the snapshot-pointer sink discipline
-shared by the CMS/quantile/dashboard sinks:
+implements exactly that split on the shared snapshot-pointer sink
+(streaming/snapshots.py):
 
   * train_quantizer -- distributed per-label centroid means
     (operators/similarity.label_centroids, one (K x dim) shuffle); only
@@ -21,9 +21,7 @@ shared by the CMS/quantile/dashboard sinks:
     centroid matrix, no Python per row), anti-join already-indexed
     vec_ids away (data-level dedup -- a bag union would duplicate a
     vector re-sent under a later batch id), union with the current
-    snapshot, write snap_{batch_id}, swap the pointer. The pointer-id
-    replay guard makes whole-batch redelivery a clean no-op (uniform
-    behavior across all sketch sinks).
+    snapshot, commit it as snap_{batch_id} (streaming/snapshots.py).
   * search: read_index joins the maintained (vec_id, cell) table
     against the probe cells of a query -- the same equi-join shape
     ivf_topk plans, now against state that did NOT require touching the
@@ -51,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.similarity import ivf_assign, ivf_centroid_arrays
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, read_current, start
 
 _INDEX_SCHEMA = "vec_id bigint, cell int"
 _QUANTIZER = "_QUANTIZER.json"
@@ -84,10 +82,7 @@ def load_quantizer(sink_root: str) -> list[tuple[int, list[float]]]:
 def read_index(spark, sink_root: str) -> DataFrame:
     """The current committed assignment table (empty, well-typed,
     before the first commit)."""
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    return spark.read.schema(_INDEX_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, _INDEX_SCHEMA)
 
 
 def apply_index_batch(
@@ -98,8 +93,7 @@ def apply_index_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """One micro-batch of new vectors into the index. Replay guard as
-    in the other sketch sinks (pointer records the last applied id).
+    """One micro-batch of new vectors into the index.
 
     Data-level dedup: the pointer guard only covers whole-batch
     redelivery; a vec_id arriving again in a LATER batch id (source
@@ -109,31 +103,24 @@ def apply_index_batch(
     wins, which equals last-write-wins because corpus vectors are
     immutable (an UPDATED vector is out of contract for an IVF index;
     route updates through a delete+reinsert compaction instead)."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    cents = load_quantizer(sink_root)
-    assigned = batch_df.select(
-        F.col(id_col).cast("bigint").alias("vec_id"),
-        ivf_assign(vec_col, cents).cast("int").alias("cell"),
-    )
-    existing = read_index(spark, sink_root)
-    # no broadcast hint: the build side is the FULL index key set, which
-    # grows with the corpus -- AQE picks broadcast while it is small and
-    # degrades to shuffle anti-join when it is not
-    fresh = assigned.join(
-        existing.select("vec_id"), on="vec_id", how="left_anti"
-    )
-    merged = existing.unionByName(fresh)
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+
+    def write(new_dir: str) -> None:
+        cents = load_quantizer(sink_root)
+        assigned = batch_df.select(
+            F.col(id_col).cast("bigint").alias("vec_id"),
+            ivf_assign(vec_col, cents).cast("int").alias("cell"),
+        )
+        existing = read_index(spark, sink_root)
+        # no broadcast hint: the build side is the FULL index key set,
+        # which grows with the corpus -- AQE picks broadcast while it is
+        # small and degrades to shuffle anti-join when it is not
+        fresh = assigned.join(
+            existing.select("vec_id"), on="vec_id", how="left_anti"
+        )
+        merged = existing.unionByName(fresh)
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def start_index_maintenance(
@@ -142,22 +129,16 @@ def start_index_maintenance(
     checkpoint_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the IVF assignment table over a stream of new vectors.
     ``train_quantizer`` must have run against this sink_root first (the
     frozen-quantizer contract)."""
     spark = vectors_stream.sparkSession
     load_quantizer(sink_root)  # fail fast if training never happened
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_index_batch(
-            spark, batch_df, batch_id, sink_root, id_col, vec_col
-        )
-
-    writer = vectors_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        vectors_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_index_batch(
+            spark, df, batch_id, sink_root, id_col, vec_col
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,7 +3,8 @@
 The batch operator (operators/sequence.py) compiles per-key history into
 label strings and regex-matches them; the streaming form keeps that
 history LIVE: each micro-batch's (ts, tiebreak, label) triples append to
-per-key state arrays under the shared snapshot-pointer discipline, and
+per-key state arrays under the shared snapshot-pointer sink
+(streaming/snapshots.py), and
 the match view sorts-then-stringifies at read time. Storing triples
 rather than pre-built strings makes the sink ORDER-INSENSITIVE across
 batches -- late or interleaved arrivals land in the right position at
@@ -19,14 +20,12 @@ pattern's horizon at apply time).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sequence import match_counts
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, read_current, start
 
 _STATE_SCHEMA = (
     "key string, evs array<struct<ts:timestamp,tb:string,c:string>>"
@@ -34,10 +33,7 @@ _STATE_SCHEMA = (
 
 
 def read_cep_state(spark, sink_root: str) -> DataFrame:
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.schema(_STATE_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, _STATE_SCHEMA)
 
 
 def apply_cep_batch(
@@ -52,50 +48,42 @@ def apply_cep_batch(
 ) -> None:
     """Append one micro-batch's labeled events to per-key state. Merge is
     a full-outer join + array concat -- a key never re-reads other keys'
-    history, and an absent side contributes an empty array. Pointer-id
-    replay guard as in every sketch sink."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    batch_evs = (
-        batch_df.select(
-            F.col(key).cast("string").alias("key"),
-            F.struct(
-                F.col(ts_col).alias("ts"),
-                # zero-padded so STRING order == numeric order (type-
-                # stable state across heterogeneous upstreams; tiebreak
-                # contract: non-negative)
-                F.lpad(F.col(tiebreak).cast("string"), 20, "0").alias(
-                    "tb"
-                ),
-                label.alias("c"),
-            ).alias("s"),
+    history, and an absent side contributes an empty array."""
+
+    def write(new_dir: str) -> None:
+        batch_evs = (
+            batch_df.select(
+                F.col(key).cast("string").alias("key"),
+                F.struct(
+                    F.col(ts_col).alias("ts"),
+                    # zero-padded so STRING order == numeric order (type-
+                    # stable state across heterogeneous upstreams;
+                    # tiebreak contract: non-negative)
+                    F.lpad(F.col(tiebreak).cast("string"), 20, "0").alias(
+                        "tb"
+                    ),
+                    label.alias("c"),
+                ).alias("s"),
+            )
+            .groupBy("key")
+            .agg(F.collect_list("s").alias("new_evs"))
         )
-        .groupBy("key")
-        .agg(F.collect_list("s").alias("new_evs"))
-    )
-    state = read_cep_state(spark, sink_root)
-    empty = F.array().cast(
-        "array<struct<ts:timestamp,tb:string,c:string>>"
-    )
-    merged = (
-        state.join(batch_evs, "key", "full_outer")
-        .select(
-            "key",
-            F.concat(
-                F.coalesce("evs", empty), F.coalesce("new_evs", empty)
-            ).alias("evs"),
+        state = read_cep_state(spark, sink_root)
+        empty = F.array().cast(
+            "array<struct<ts:timestamp,tb:string,c:string>>"
         )
-    )
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+        merged = (
+            state.join(batch_evs, "key", "full_outer")
+            .select(
+                "key",
+                F.concat(
+                    F.coalesce("evs", empty), F.coalesce("new_evs", empty)
+                ).alias("evs"),
+            )
+        )
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def cep_match_view(spark, sink_root: str, pattern: str) -> DataFrame:
@@ -120,19 +108,12 @@ def start_cep_maintenance(
     ts_col: str,
     tiebreak: str,
     label,
-    available_now: bool = True,
 ) -> StreamingQuery:
     spark = events_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cep_batch(
-            spark, batch_df, batch_id, sink_root, key, ts_col, tiebreak,
-            label,
-        )
-
-    writer = events_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        events_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_cep_batch(
+            spark, df, batch_id, sink_root, key, ts_col, tiebreak, label
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

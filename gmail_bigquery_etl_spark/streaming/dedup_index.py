@@ -11,16 +11,15 @@ BigQuery, `etl_service/main.py:101` keeps an exact in-memory id set):
 the LSH PARAMETERS (num_hashes, bands, shingle width -- fixed salted
 hash functions, operators/dedup.minhash_coeffs) are FROZEN by
 construction, while the BUCKET TABLE (doc_id, band, band_key) grows
-online, one micro-batch at a time, on the snapshot-pointer sink
-discipline shared by the CMS/quantile/dashboard/ANN sinks:
+online, one micro-batch at a time, on the shared snapshot-pointer sink
+(streaming/snapshots.py):
 
   * apply_dedup_batch -- band the batch's documents (the exact
     banded_signatures code path the batch LSH pair generator uses, so
     streamed and one-shot tables are bit-identical), anti-join
     already-indexed doc_ids away (first write wins; documents are
-    immutable), union with the current snapshot, write snap_{batch_id},
-    swap the pointer. The pointer-id replay guard makes whole-batch
-    redelivery a clean no-op.
+    immutable), union with the current snapshot, commit it as
+    snap_{batch_id}.
   * find_near_dup_candidates -- band a probe frame with the same
     parameters and equi-join it against the maintained table on
     (band, band_key): the candidates an ingest gate would route to
@@ -43,14 +42,12 @@ overlapping batch ids, and restart continuity on one checkpoint.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import banded_signatures, grams_stage
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, read_current, start
 
 _INDEX_SCHEMA = "doc_id bigint, band int, band_key string"
 
@@ -58,10 +55,7 @@ _INDEX_SCHEMA = "doc_id bigint, band int, band_key string"
 def read_dedup_index(spark, sink_root: str) -> DataFrame:
     """The current committed bucket table (empty, well-typed, before the
     first commit)."""
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    return spark.read.schema(_INDEX_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, _INDEX_SCHEMA)
 
 
 def _band(
@@ -89,31 +83,26 @@ def apply_dedup_batch(
     bands: int = 4,
     shingle_n: int = 3,
 ) -> None:
-    """One micro-batch of new documents into the bucket index. Replay
-    guard as in the other sketch sinks (pointer records the last applied
-    id); doc-level dedup via anti-join (the guard only covers
+    """One micro-batch of new documents into the bucket index, with
+    doc-level dedup via anti-join (the replay guard only covers
     whole-batch redelivery -- a doc_id re-sent under a LATER batch id
     would duplicate every one of its band rows under a bag union)."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    banded = _band(batch_df, text_col, id_col, num_hashes, bands, shingle_n)
-    existing = read_dedup_index(spark, sink_root)
-    # no broadcast hint: the build side is the full indexed id set, which
-    # grows with the corpus -- AQE broadcasts while small, shuffles after
-    fresh = banded.join(
-        existing.select("doc_id").distinct(), on="doc_id", how="left_anti"
-    )
-    merged = existing.unionByName(fresh)
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+
+    def write(new_dir: str) -> None:
+        banded = _band(
+            batch_df, text_col, id_col, num_hashes, bands, shingle_n
+        )
+        existing = read_dedup_index(spark, sink_root)
+        # no broadcast hint: the build side is the full indexed id set,
+        # which grows with the corpus -- AQE broadcasts while small,
+        # shuffles after
+        fresh = banded.join(
+            existing.select("doc_id").distinct(), on="doc_id", how="left_anti"
+        )
+        merged = existing.unionByName(fresh)
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def find_near_dup_candidates(
@@ -154,27 +143,14 @@ def start_dedup_index_maintenance(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the LSH bucket table over a stream of new documents."""
     spark = docs_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_dedup_batch(
-            spark,
-            batch_df,
-            batch_id,
-            sink_root,
-            text_col,
-            id_col,
-            num_hashes,
-            bands,
-            shingle_n,
-        )
-
-    writer = docs_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        docs_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_dedup_batch(
+            spark, df, batch_id, sink_root, text_col, id_col,
+            num_hashes, bands, shingle_n,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

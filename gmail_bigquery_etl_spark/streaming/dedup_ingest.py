@@ -6,13 +6,10 @@ Each micro-batch is classified against the CURRENT sink snapshot with
 operators/incremental.incremental_near_dup (content-hash exact join ->
 two-sided LSH band join -> Jaccard verify); only ``ingest``-outcome
 survivors append, so batch N+1 dedups against batch N's survivors as well
-as the original corpus. Snapshot-pointer commit discipline is shared with
-the CDC merge sink (merge_sink): write the new snapshot fully, then swap.
-
-Restart semantics: foreachBatch re-delivers an uncommitted batch; its
-survivors are by then IN the last committed snapshot, so re-classification
-marks them exact_dup and the re-merge is a no-op append -- effectively-once
-without a transaction log.
+as the original corpus. The sink commits through the shared
+snapshot-pointer protocol (streaming/snapshots.py), whose replay guard
+makes a restart in the crash window a no-op: the redelivered batch never
+rewrites the snapshot it would read.
 
 Scale posture: in production the sink's band table / signatures are a
 persisted index maintained incrementally next to the data (kilobytes per
@@ -23,38 +20,30 @@ megabytes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.incremental import incremental_near_dup
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, read_current, start
+
+_COLS = ["doc_id", "text"]
 
 
-def start_near_dup_ingest(
-    docs_stream: DataFrame,
+def apply_near_dup_batch(
+    spark,
+    batch_df: DataFrame,
+    batch_id: int,
     sink_root: str,
-    checkpoint_path: str,
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Ingest a stream of (doc_id, text) rows, refusing exact and near
-    duplicates of everything already in the sink. Returns the query
-    handle; read the result via merge_sink.current_snapshot_dir."""
-    spark = docs_stream.sparkSession
+) -> None:
+    """Append the batch's (doc_id, text) rows that are neither exact nor
+    near duplicates of the sink's current snapshot."""
+    batch = batch_df.select(*_COLS)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(sink_root, exist_ok=True)
-        cur = current_snapshot_dir(sink_root)
-        cols = ["doc_id", "text"]
-        batch = batch_df.select(*cols)
-        if cur is not None:
-            base = spark.read.parquet(cur)
-        else:
-            base = spark.createDataFrame([], batch.schema)
+    def write(new_dir: str) -> None:
+        base = read_current(spark, sink_root, batch.schema)
         survivors = (
             incremental_near_dup(
                 batch,
@@ -64,16 +53,29 @@ def start_near_dup_ingest(
                 bands=bands,
             )
             .filter("outcome = 'ingest'")
-            .select(*cols)
+            .select(*_COLS)
         )
-        new_dir = os.path.join(sink_root, f"snap_{batch_id}")
         base.unionAll(survivors).write.mode("overwrite").parquet(new_dir)
-        with open(os.path.join(sink_root, _POINTER), "w") as f:
-            f.write(f"snap_{batch_id}")
 
-    writer = docs_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    commit(sink_root, batch_id, write)
+
+
+def start_near_dup_ingest(
+    docs_stream: DataFrame,
+    sink_root: str,
+    checkpoint_path: str,
+    threshold: float = 0.5,
+    num_hashes: int = 16,
+    bands: int = 4,
+) -> StreamingQuery:
+    """Ingest a stream of (doc_id, text) rows, refusing exact and near
+    duplicates of everything already in the sink. Returns the query
+    handle; read the result via snapshots.current_snapshot_dir."""
+    spark = docs_stream.sparkSession
+    return start(
+        docs_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_near_dup_batch(
+            spark, df, batch_id, sink_root, threshold, num_hashes, bands
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -23,11 +23,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.column import Column
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.incremental import ingest_increment
+from .snapshots import start
 
 
 def start_incremental_ingest(
@@ -35,7 +36,6 @@ def start_incremental_ingest(
     sink_path: str,
     checkpoint_path: str,
     existing_filter: Column | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the streaming ingest; returns the StreamingQuery handle."""
     spark = messages_stream.sparkSession
@@ -55,12 +55,7 @@ def start_incremental_ingest(
         increment = ingest_increment(batch_df, existing)
         increment.write.mode("append").parquet(sink_path)
 
-    writer = messages_stream.writeStream.foreachBatch(sink_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(messages_stream, checkpoint_path, sink_batch)
 
 
 def _sink_exists(path: str) -> bool:

@@ -2,34 +2,27 @@
 
 The reservoir-sampling story at stream time: per micro-batch, take the
 batch's own bottom-k, merge with the committed sketch, re-take bottom-k,
-commit under a new snapshot pointer. State is O(k) rows forever; a batch
-never re-scans history. Same snapshot-pointer + replay-guard discipline
-as the CMS/quantile/dashboard sinks (streaming/sketches.py) -- KMV merge
-is NOT idempotent against double-apply only in the trivial sense (merge
-of an already-merged batch is actually a no-op for KMV since dedup
-discards repeats), but the guard keeps the generation numbering and
-crash-window semantics uniform across every sketch sink.
+commit through the shared snapshot-pointer sink (streaming/snapshots.py).
+State is O(k) rows forever; a batch never re-scans history. Re-merging an
+already-merged batch would not change a KMV sketch (dedup discards
+repeats), but the sink's replay guard still keeps a redelivered batch from
+rewriting the snapshot it reads.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.kmv import kmv_build, kmv_merge
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, read_current, start
 
 _KMV_SCHEMA = "h bigint, value string"
 
 
 def read_kmv(spark, sink_root: str) -> DataFrame:
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], _KMV_SCHEMA)
-    return spark.read.schema(_KMV_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, _KMV_SCHEMA)
 
 
 def apply_kmv_batch(
@@ -44,22 +37,15 @@ def apply_kmv_batch(
     directly testable. Values are committed as strings (the hash is
     over the string form anyway, so the sketch is type-stable across
     heterogeneous upstreams)."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    batch_sketch = kmv_build(batch_df, col, k).withColumn(
-        "value", F.col("value").cast("string")
-    )
-    merged = kmv_merge([read_kmv(spark, sink_root), batch_sketch], k)
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+
+    def write(new_dir: str) -> None:
+        batch_sketch = kmv_build(batch_df, col, k).withColumn(
+            "value", F.col("value").cast("string")
+        )
+        merged = kmv_merge([read_kmv(spark, sink_root), batch_sketch], k)
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def start_kmv_maintenance(
@@ -68,16 +54,12 @@ def start_kmv_maintenance(
     sink_root: str,
     checkpoint_path: str,
     k: int = 256,
-    available_now: bool = True,
 ) -> StreamingQuery:
     spark = items_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_kmv_batch(spark, batch_df, batch_id, col, sink_root, k)
-
-    writer = items_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        items_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_kmv_batch(
+            spark, df, batch_id, col, sink_root, k
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -33,13 +33,12 @@ recompute-from-scratch answer it is supposed to equal, and the parity
 contract here is exact: pytest pins stream==batch bit-for-bit, and the
 gated query's oracle recomputes the final view relationally.
 
-Sink discipline: same snapshot-pointer protocol as the CMS/quantile/
-dashboard/ANN sinks (write snap_{batch_id}, atomic pointer swap), with
-the same pointer-id replay guard -- delta application is ADDITIVE, so a
-crash-window redelivery (batch committed to the sink but not to the
-stream checkpoint) must be dropped, not re-applied. Retention/vacuum
-and time travel come for free from merge_sink.list_versions/vacuum
-(the sink layout is identical).
+Sink discipline: the shared snapshot-pointer protocol
+(streaming/snapshots.py). Delta application is ADDITIVE, so its replay
+guard is what keeps a crash-window redelivery (batch committed to the
+sink but not to the stream checkpoint) from being applied twice.
+Retention/vacuum and time travel come for free from
+merge_sink.list_versions/vacuum (the sink layout is identical).
 
 Scale posture: the per-batch plan is one partial+final hash aggregate
 over the delta (shuffle on the group key, map-side combine) plus a
@@ -51,28 +50,18 @@ range -- the maintenance algebra here carries unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, current_snapshot_dir, read_current, start
 
 
 def read_view(spark, sink_root: str, schema: str | None = None) -> DataFrame:
     """The current committed view state. Before the first commit an
     explicit ``schema`` (DDL string) is required to return an empty,
-    well-typed frame; afterwards the parquet schema is authoritative."""
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        if schema is None:
-            raise ValueError(
-                f"no committed view snapshot in {sink_root} and no "
-                "schema given for the empty frame"
-            )
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(cur)
+    well-typed frame; without one the parquet schema is read."""
+    return read_current(spark, sink_root, schema)
 
 
 def apply_view_delta(
@@ -86,52 +75,45 @@ def apply_view_delta(
 ) -> None:
     """One maintenance step (module-level so batch callers and tests
     drive the exact code path the streaming wrapper runs): pre-aggregate
-    the delta, add onto current state, drop zero-count groups, write
-    ``snap_{batch_id}``, swap the pointer. Replay guard as in every
-    additive sink: a batch id at or below the committed pointer already
-    took effect and is dropped.
+    the delta, add onto current state, drop zero-count groups, commit
+    the result as ``snap_{batch_id}``.
 
     ``delta_df`` columns: group_cols + measure_cols (exact integer
     units) + ``mult_col`` (+1 insert / -1 retract; any nonzero integer
     multiplicity works -- a pre-aggregated upstream can send k).
     Maintained state: group_cols, ``n_rows`` (sum of mult), and one
     summed column per measure (same name)."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    partial = delta_df.groupBy(*group_cols).agg(
-        F.sum(mult_col).cast("bigint").alias("n_rows"),
-        *[
-            F.sum(F.col(c) * F.col(mult_col)).cast("bigint").alias(c)
-            for c in measure_cols
-        ],
-    )
-    if cur is not None:
-        state = spark.read.parquet(cur)
-        partial = (
-            state.unionByName(partial)
-            .groupBy(*group_cols)
-            .agg(
-                F.sum("n_rows").cast("bigint").alias("n_rows"),
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in measure_cols
-                ],
-            )
+
+    def write(new_dir: str) -> None:
+        partial = delta_df.groupBy(*group_cols).agg(
+            F.sum(mult_col).cast("bigint").alias("n_rows"),
+            *[
+                F.sum(F.col(c) * F.col(mult_col)).cast("bigint").alias(c)
+                for c in measure_cols
+            ],
         )
-    # counting-algorithm termination: a group whose support count hits
-    # zero leaves the view (its sums are zero too for well-formed
-    # deltas; keeping the row would resurrect dead groups in readers)
-    merged = partial.where(F.col("n_rows") != 0)
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+        cur = current_snapshot_dir(sink_root)
+        if cur is not None:
+            state = spark.read.parquet(cur)
+            partial = (
+                state.unionByName(partial)
+                .groupBy(*group_cols)
+                .agg(
+                    F.sum("n_rows").cast("bigint").alias("n_rows"),
+                    *[
+                        F.sum(c).cast("bigint").alias(c)
+                        for c in measure_cols
+                    ],
+                )
+            )
+        # counting-algorithm termination: a group whose support count
+        # hits zero leaves the view (its sums are zero too for
+        # well-formed deltas; keeping the row would resurrect dead
+        # groups in readers)
+        merged = partial.where(F.col("n_rows") != 0)
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def read_minmax_view(
@@ -161,26 +143,15 @@ def start_view_maintenance(
     group_cols: list[str],
     measure_cols: list[str],
     mult_col: str = "mult",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the aggregate view over a stream of deltas. Returns the
     query handle; read the result via ``read_view``."""
     spark = deltas_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_view_delta(
-            spark,
-            batch_df,
-            batch_id,
-            sink_root,
-            group_cols,
-            measure_cols,
+    return start(
+        deltas_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_view_delta(
+            spark, df, batch_id, sink_root, group_cols, measure_cols,
             mult_col=mult_col,
-        )
-
-    writer = deltas_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -52,8 +52,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_upsert
+from .snapshots import read_pointer, start, swap_pointer
 
-_POINTER = "_CURRENT"
 # no leading underscore: partitionBy writes dirs named "<col>=<v>", and
 # Spark's file index skips underscore-prefixed paths in listings
 _BUCKET = "mbucket"
@@ -94,18 +94,13 @@ def _commit_manifest(
         os.remove(tmp)
     else:
         os.replace(tmp, path)
-    ptmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(ptmp, "w") as f:
-        f.write(f"manifest_{version}.json")
-    os.replace(ptmp, os.path.join(sink_root, _POINTER))
+    swap_pointer(sink_root, os.path.basename(path))
 
 
 def current_manifest(sink_root: str) -> dict | None:
-    ptr = os.path.join(sink_root, _POINTER)
-    if not os.path.exists(ptr):
+    name = read_pointer(sink_root)
+    if name is None:
         return None
-    with open(ptr) as f:
-        name = f.read().strip()
     with open(os.path.join(sink_root, name)) as f:
         return json.load(f)
 
@@ -872,34 +867,22 @@ def start_bucketed_merge_apply(
     keys: list[str],
     delete_col: str = "is_delete",
     n_buckets: int = 16,
-    available_now: bool = True,
 ):
     """Streaming wrapper: apply a CDC post-image stream through the
     partition-scoped merge, one manifest commit per micro-batch."""
     spark = changes_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # stream_batch_id (not the version counter) keys the replay
-        # guard: maintenance commits interleaved with the stream bump
-        # versions past foreachBatch ids, and a version-keyed guard
-        # would then drop live batches as replays
-        apply_merge_batch_bucketed(
-            spark,
-            batch_df,
-            batch_id,
-            sink_root,
-            keys,
-            delete_col=delete_col,
-            n_buckets=n_buckets,
-            stream_batch_id=batch_id,
-        )
-
-    writer = changes_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    # stream_batch_id (not the version counter) keys the replay guard:
+    # maintenance commits interleaved with the stream bump versions past
+    # foreachBatch ids, and a version-keyed guard would then drop live
+    # batches as replays
+    return start(
+        changes_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_merge_batch_bucketed(
+            spark, df, batch_id, sink_root, keys, delete_col=delete_col,
+            n_buckets=n_buckets, stream_batch_id=batch_id,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- Secondary-column Bloom skipping index -----------------------------------

@@ -15,10 +15,10 @@ is the part that carries to 100 TB unchanged. Batches must be key-unique
 (standard CDC post-image contract); later batches win over earlier ones by
 construction (sequential merges).
 
-Restart semantics: the snapshot pointer advances only after the new
-snapshot is fully written, and foreachBatch re-delivers an uncommitted
-batch on restart -- re-merging the same post-images is idempotent, so the
-sink is effectively-once.
+Restart semantics are the shared snapshot-pointer contract
+(streaming/snapshots.py): the pointer advances only after the new
+snapshot is fully written, and a redelivered batch the pointer already
+records is dropped, so the sink is effectively-once.
 """
 
 from __future__ import annotations
@@ -31,40 +31,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.merge import merge_upsert
+from .snapshots import (
+    commit,
+    current_snapshot_dir,
+    list_versions,
+    snapshot_dir,
+    start,
+)
 
-_POINTER = "_CURRENT"
 _COMMIT_TS = "_commit_ts"  # leading underscore: ignored by parquet readers
-
-
-def current_snapshot_dir(sink_root: str) -> str | None:
-    ptr = os.path.join(sink_root, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        name = f.read().strip()
-    return os.path.join(sink_root, name) if name else None
-
-
-def list_versions(sink_root: str) -> list[int]:
-    """Snapshot versions retained on disk, ascending. Every committed
-    merge generation keeps its ``snap_{batch_id}`` directory until
-    ``vacuum`` removes it, so the sink is a full version history -- the
-    raw-parquet analog of a Delta/Iceberg commit log."""
-    if not os.path.isdir(sink_root):
-        return []
-    out = []
-    for name in os.listdir(sink_root):
-        if name.startswith("snap_") and os.path.isdir(
-            os.path.join(sink_root, name)
-        ):
-            out.append(int(name.removeprefix("snap_")))
-    return sorted(out)
 
 
 def commit_ts_of(sink_root: str, version: int) -> float:
     """Commit timestamp (epoch seconds) recorded in the snapshot's
     sidecar at write time. Raises for a vacuumed/uncommitted version."""
-    p = os.path.join(sink_root, f"snap_{version}", _COMMIT_TS)
+    p = os.path.join(snapshot_dir(sink_root, version), _COMMIT_TS)
     if not os.path.exists(p):
         raise ValueError(
             f"version {version} not retained in {sink_root} "
@@ -112,7 +93,7 @@ def read_as_of(
         if cur is None:
             raise ValueError(f"no committed snapshot in {sink_root}")
         return spark.read.parquet(cur)
-    d = os.path.join(sink_root, f"snap_{version}")
+    d = snapshot_dir(sink_root, version)
     if not os.path.isdir(d):
         have = list_versions(sink_root)
         raise ValueError(
@@ -273,7 +254,7 @@ def forget_keys(
     key_df = F.broadcast(spark.createDataFrame(key_rows, schema=keys))
     removed = {}
     for v in list_versions(sink_root):
-        d = os.path.join(sink_root, f"snap_{v}")
+        d = snapshot_dir(sink_root, v)
         df = spark.read.parquet(d)
         before = df.count()
         kept = df.join(key_df, on=keys, how="left_anti")
@@ -305,13 +286,12 @@ def vacuum(sink_root: str, keep_last: int = 2) -> list[int]:
     keep_last = max(1, keep_last)
     versions = list_versions(sink_root)
     cur = current_snapshot_dir(sink_root)
-    cur_name = os.path.basename(cur) if cur else None
     removed = []
     for v in versions[:-keep_last]:
-        name = f"snap_{v}"
-        if name == cur_name:
+        d = snapshot_dir(sink_root, v)
+        if d == cur:
             continue
-        shutil.rmtree(os.path.join(sink_root, name))
+        shutil.rmtree(d)
         removed.append(v)
     return removed
 
@@ -327,18 +307,11 @@ def apply_merge_batch(
 ) -> None:
     """One CDC merge generation (module-level so batch callers and tests
     drive the exact code path the streaming sink runs): read the current
-    snapshot, merge the post-images, write ``snap_{batch_id}``, record
-    its commit timestamp sidecar, swap the pointer atomically.
-
-    Replay guard: foreachBatch re-delivers an uncommitted batch after a
-    crash; if the crash landed BETWEEN the pointer swap and the stream's
-    checkpoint commit, the redelivered batch_id equals the pointer's id
-    and re-running would overwrite the very snapshot dir the merged plan
-    lazily reads (Spark refuses, wedging recovery). Same pointer-id
-    guard as the additive sketch sinks: a batch id at or below the
-    committed pointer already took effect, so return early. Re-merging
-    identical post-images would be content-idempotent, but the WRITE
-    path is not -- the guard protects the write path.
+    snapshot, merge the post-images, write ``snap_{batch_id}`` with its
+    commit timestamp sidecar, and commit it through snapshots.commit.
+    Re-merging identical post-images would be content-idempotent, but
+    the WRITE path is not (it reads the snapshot it would overwrite), so
+    the replay guard matters here as much as for the additive sinks.
 
     Schema evolution (Delta-style mergeSchema): a batch may ADD columns;
     history rows are backfilled with NULL for the new columns. A batch
@@ -351,40 +324,33 @@ def apply_merge_batch(
     generations for ``read_as_of(ts=...)`` to be meaningful (true for
     wall-clock under the sequential foreachBatch contract)."""
     data_cols = [c for c in batch_df.columns if c != delete_col]
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        cur_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= cur_id:
-            return
-        base = spark.read.parquet(cur)
-        dropped = [c for c in base.columns if c not in data_cols]
-        if dropped:
-            raise ValueError(
-                f"batch {batch_id} drops snapshot columns {dropped}; "
-                "a CDC post-image feed may add columns (NULL-backfilled) "
-                "but never silently lose them"
-            )
-        for c in data_cols:
-            if c not in base.columns:
-                base = base.withColumn(
-                    c, F.lit(None).cast(batch_df.schema[c].dataType)
+
+    def write(new_dir: str) -> None:
+        cur = current_snapshot_dir(sink_root)
+        if cur is not None:
+            base = spark.read.parquet(cur)
+            dropped = [c for c in base.columns if c not in data_cols]
+            if dropped:
+                raise ValueError(
+                    f"batch {batch_id} drops snapshot columns {dropped}; "
+                    "a CDC post-image feed may add columns "
+                    "(NULL-backfilled) but never silently lose them"
                 )
-    else:
-        base = spark.createDataFrame([], batch_df.select(*data_cols).schema)
-    merged = merge_upsert(base, batch_df, keys, delete_col=delete_col)
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    # The write both READS the current snapshot and writes the new one,
-    # so the new dir must differ from cur (guaranteed by the replay
-    # guard above); the pointer swaps only after the write + commit-ts
-    # sidecar fully succeed.
-    merged.write.mode("overwrite").parquet(new_dir)
-    with open(os.path.join(new_dir, _COMMIT_TS), "w") as f:
-        f.write(repr(time.time() if commit_ts is None else commit_ts))
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+            for c in data_cols:
+                if c not in base.columns:
+                    base = base.withColumn(
+                        c, F.lit(None).cast(batch_df.schema[c].dataType)
+                    )
+        else:
+            base = spark.createDataFrame(
+                [], batch_df.select(*data_cols).schema
+            )
+        merged = merge_upsert(base, batch_df, keys, delete_col=delete_col)
+        merged.write.mode("overwrite").parquet(new_dir)
+        with open(os.path.join(new_dir, _COMMIT_TS), "w") as f:
+            f.write(repr(time.time() if commit_ts is None else commit_ts))
+
+    commit(sink_root, batch_id, write)
 
 
 def start_merge_apply(
@@ -393,20 +359,14 @@ def start_merge_apply(
     checkpoint_path: str,
     keys: list[str],
     delete_col: str = "is_delete",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Apply a stream of CDC post-images onto the sink. Returns the query
     handle; read the result via ``current_snapshot_dir``."""
     spark = changes_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_merge_batch(
-            spark, batch_df, batch_id, sink_root, keys, delete_col=delete_col
-        )
-
-    writer = changes_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        changes_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_merge_batch(
+            spark, df, batch_id, sink_root, keys, delete_col=delete_col
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

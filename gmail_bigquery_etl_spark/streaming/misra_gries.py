@@ -1,19 +1,13 @@
 """Streaming Misra-Gries maintenance: a deterministic heavy-hitter
 summary kept current over a stream, one micro-batch merge at a time.
 
-Same snapshot-pointer sink discipline as the CMS twin
-(streaming/sketches.py): per micro-batch, summarize the batch
-(operators/misra_gries.mg_build), merge into the committed summary
-(mg_merge), write the new O(k) summary table, atomically swap the
-pointer. Readers always see a complete summary.
-
-Replay semantics: an MG merge -- like a CMS merge -- is NOT idempotent
-(re-merging a batch double-counts its mass before the compress), so the
-pointer records the last merged batch id and ``apply_mg_batch`` no-ops
-on any batch id <= it. Crash before the swap: replay lands on the
-previous snapshot (correct). Crash after the swap but before the
-checkpoint commit: foreachBatch redelivers a batch the pointer already
-recorded, and the guard drops it.
+Per micro-batch, summarize the batch (operators/misra_gries.mg_build),
+merge into the committed summary (mg_merge) and commit the new O(k)
+summary table through the shared snapshot-pointer sink
+(streaming/snapshots.py), so readers always see a complete summary. An
+MG merge -- like a CMS merge -- is NOT idempotent (re-merging a batch
+double-counts its mass before the compress), which is why that sink's
+replay guard matters here.
 
 What the parity test can and cannot pin: unlike the additive CMS
 (split-invariant, streamed cells == one batch build bit-for-bit), MG
@@ -27,22 +21,17 @@ counts, which holds for every split.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.misra_gries import SUMMARY_SCHEMA, mg_build, mg_merge
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, read_current, start
 
 
 def read_mg_summary(spark, sink_root: str) -> DataFrame:
     """The current committed summary (empty, well-typed, before the
     first commit)."""
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], SUMMARY_SCHEMA)
-    return spark.read.schema(SUMMARY_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, SUMMARY_SCHEMA)
 
 
 def apply_mg_batch(
@@ -55,23 +44,16 @@ def apply_mg_batch(
 ) -> None:
     """One micro-batch merge (module-level so the replay guard is
     directly testable)."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    merged = mg_merge(
-        read_mg_summary(spark, sink_root),
-        mg_build(batch_df, item_col, k=k),
-        k=k,
-    )
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+
+    def write(new_dir: str) -> None:
+        merged = mg_merge(
+            read_mg_summary(spark, sink_root),
+            mg_build(batch_df, item_col, k=k),
+            k=k,
+        )
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def start_mg_maintenance(
@@ -80,18 +62,14 @@ def start_mg_maintenance(
     sink_root: str,
     checkpoint_path: str,
     k: int = 64,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the summary over a stream of items. Returns the query
     handle; read the live summary via ``read_mg_summary``."""
     spark = items_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_mg_batch(spark, batch_df, batch_id, item_col, sink_root, k=k)
-
-    writer = items_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        items_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_mg_batch(
+            spark, df, batch_id, item_col, sink_root, k=k
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -18,10 +18,8 @@ merge is a MIN re-aggregate over (existing snapshot UNION batch minima)
 — a proper mergeable-sketch update, so the committed index is
 arrival-order INDEPENDENT: after any batch split, in any order, it
 equals the batch-computed first-occurrence table of all documents seen
-(the parity test pins this bit-for-bit). Snapshot-pointer sink
-discipline shared by the CMS/quantile/ANN/LSH sinks: write
-snap_{batch_id}, swap the pointer; the pointer-id replay guard makes
-whole-batch redelivery a clean no-op.
+(the parity test pins this bit-for-bit). Each batch commits through the
+shared snapshot-pointer sink (streaming/snapshots.py).
 
 Scale posture: per micro-batch the work is O(batch tokens) chunking
 (map-side) + one MIN aggregate keyed by paragraph string —
@@ -34,15 +32,13 @@ keyed on the paragraph hash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.paragraphs import explode_paras, para_arrays
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, read_current, start
 
 _INDEX_SCHEMA = "para string, doc_id bigint, pos int"
 
@@ -50,10 +46,7 @@ _INDEX_SCHEMA = "para string, doc_id bigint, pos int"
 def read_para_index(spark, sink_root: str) -> DataFrame:
     """The current committed first-occurrence table (empty, well-typed,
     before the first commit)."""
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    return spark.read.schema(_INDEX_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, _INDEX_SCHEMA)
 
 
 def _batch_minima(
@@ -80,31 +73,26 @@ def apply_para_batch(
     batch minima unioned with the snapshot, re-min-aggregated per
     paragraph. Re-sent documents can only ever LOWER a paragraph's
     first occurrence to the same or an earlier (doc_id, pos) — the
-    merge is idempotent at the value level, and the pointer guard
+    merge is idempotent at the value level, and the replay guard
     short-circuits whole-batch redelivery."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    fresh = _batch_minima(batch_df, text_col, id_col).select(
-        "para", F.col("k.doc_id").alias("doc_id"), F.col("k.pos").alias("pos")
-    )
-    merged = (
-        read_para_index(spark, sink_root)
-        .unionByName(fresh)
-        .groupBy("para")
-        .agg(F.min(F.struct("doc_id", "pos")).alias("k"))
-        .select("para", F.col("k.doc_id").alias("doc_id"),
-                F.col("k.pos").alias("pos"))
-    )
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+
+    def write(new_dir: str) -> None:
+        fresh = _batch_minima(batch_df, text_col, id_col).select(
+            "para",
+            F.col("k.doc_id").alias("doc_id"),
+            F.col("k.pos").alias("pos"),
+        )
+        merged = (
+            read_para_index(spark, sink_root)
+            .unionByName(fresh)
+            .groupBy("para")
+            .agg(F.min(F.struct("doc_id", "pos")).alias("k"))
+            .select("para", F.col("k.doc_id").alias("doc_id"),
+                    F.col("k.pos").alias("pos"))
+        )
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def rewrite_against_index(
@@ -171,20 +159,14 @@ def start_para_index_maintenance(
     checkpoint_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the paragraph first-occurrence table over a document
     stream."""
     spark = docs_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_para_batch(
-            spark, batch_df, batch_id, sink_root, text_col, id_col
-        )
-
-    writer = docs_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        docs_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_para_batch(
+            spark, df, batch_id, sink_root, text_col, id_col
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

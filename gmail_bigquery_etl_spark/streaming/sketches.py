@@ -6,16 +6,10 @@ so maintaining one over a stream is ``merge(current, build(batch))`` per
 micro-batch -- no retraction, no watermark, O(depth x width) state no
 matter how many items flow through. This module wires operators/cms.py's
 build/merge (whose mergeability contract -- build(X ∪ Y) ==
-merge(build(X), build(Y)) -- pytest already pins) into the same
-snapshot-pointer sink discipline as the CDC merge sink: write the new
-cell table, then atomically swap the pointer, so readers always see a
-complete sketch. Unlike the CDC merge (whose post-image upserts are
-idempotent), a CMS merge is ADDITIVE, so replay needs an explicit
-dedup: the pointer records the id of the last merged batch and
-``apply_batch`` no-ops on any batch id <= it. A crash before the swap
-replays onto the previous snapshot (correct); a crash after the swap
-but before the checkpoint commit replays a batch the pointer already
-recorded, and the guard drops it instead of double-counting.
+merge(build(X), build(Y)) -- pytest already pins) into the shared
+snapshot-pointer sink (streaming/snapshots.py), so readers always see a
+complete sketch. A CMS merge is ADDITIVE, so that sink's replay guard is
+what keeps a crash-window redelivery from double-counting.
 
 The parity test asserts the operational claim end-to-end: the streamed
 sketch's cells equal a batch build over the whole fixture, bit for bit.
@@ -23,13 +17,11 @@ sketch's cells equal a batch build over the whole fixture, bit for bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cms import cms_build, cms_estimate, cms_merge
-from .merge_sink import _POINTER, current_snapshot_dir
+from .snapshots import commit, current_snapshot_dir, read_current, start
 
 _CELL_SCHEMA = "i int, col bigint, c bigint"
 
@@ -37,10 +29,7 @@ _CELL_SCHEMA = "i int, col bigint, c bigint"
 def read_sketch(spark, sink_root: str) -> DataFrame:
     """The current committed sketch (empty, well-typed, before the first
     commit)."""
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], _CELL_SCHEMA)
-    return spark.read.schema(_CELL_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, _CELL_SCHEMA)
 
 
 def apply_cms_batch(
@@ -53,26 +42,14 @@ def apply_cms_batch(
     width: int = 1024,
 ) -> None:
     """One micro-batch merge (module-level so the replay guard is
-    directly testable). Replay guard: CMS merge is ADDITIVE, so a batch
-    whose id the pointer already records (crash between pointer swap
-    and checkpoint commit, then foreachBatch redelivery) must be
-    dropped, not re-merged. foreachBatch ids are monotonically
-    increasing and pointer names are snap_{batch_id}, so id <= last
-    recorded id identifies a replayed (already-applied) batch."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    batch_cells = cms_build(batch_df, item_col, depth=depth, width=width)
-    merged = cms_merge(read_sketch(spark, sink_root), batch_cells)
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+    directly testable)."""
+
+    def write(new_dir: str) -> None:
+        batch_cells = cms_build(batch_df, item_col, depth=depth, width=width)
+        merged = cms_merge(read_sketch(spark, sink_root), batch_cells)
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def start_cms_maintenance(
@@ -82,24 +59,18 @@ def start_cms_maintenance(
     checkpoint_path: str,
     depth: int = 4,
     width: int = 1024,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the sketch over a stream of items. Returns the query
     handle; read the live sketch via ``read_sketch``."""
     spark = items_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cms_batch(
-            spark, batch_df, batch_id, item_col, sink_root,
+    return start(
+        items_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_cms_batch(
+            spark, df, batch_id, item_col, sink_root,
             depth=depth, width=width,
-        )
-
-    writer = items_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- Streaming sketch dashboard: per-window HLL + heavy hitters --------------
@@ -187,33 +158,25 @@ def apply_dashboard_batch(
     three tables stay mutually consistent), CMS cells (ADDITIVE -- the
     replay guard is what makes redelivery safe), and dictionary rows
     (set union) into the current snapshot; write all three under one new
-    snapshot dir; swap the single pointer atomically so readers always
+    snapshot dir, committed by the single pointer swap so readers always
     see a consistent triple."""
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
     from ..operators.hll import hll_merge
 
-    state = read_dashboard(spark, sink_root)
-    inc = dashboard_batch_state(
-        batch_df, ts_col, user_col, item_col, depth, width
-    )
-    new_hll = hll_merge(
-        state["hll"], inc["hll"], group_cols=["window_start"]
-    )
-    new_cms = cms_merge(state["cms"], inc["cms"])
-    new_dict = state["dict"].unionByName(inc["dict"]).distinct()
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    new_hll.write.mode("overwrite").parquet(f"{new_dir}/hll")
-    new_cms.write.mode("overwrite").parquet(f"{new_dir}/cms")
-    new_dict.write.mode("overwrite").parquet(f"{new_dir}/dict")
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+    def write(new_dir: str) -> None:
+        state = read_dashboard(spark, sink_root)
+        inc = dashboard_batch_state(
+            batch_df, ts_col, user_col, item_col, depth, width
+        )
+        new_hll = hll_merge(
+            state["hll"], inc["hll"], group_cols=["window_start"]
+        )
+        new_cms = cms_merge(state["cms"], inc["cms"])
+        new_dict = state["dict"].unionByName(inc["dict"]).distinct()
+        new_hll.write.mode("overwrite").parquet(f"{new_dir}/hll")
+        new_cms.write.mode("overwrite").parquet(f"{new_dir}/cms")
+        new_dict.write.mode("overwrite").parquet(f"{new_dir}/dict")
+
+    commit(sink_root, batch_id, write)
 
 
 def start_dashboard_maintenance(
@@ -225,32 +188,19 @@ def start_dashboard_maintenance(
     item_col: str = "event_type",
     depth: int = 4,
     width: int = 1024,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the per-window distinct-user (HLL) + heavy-hitter (CMS)
     dashboard over a stream: the sketch family's streaming-twin
     composition. Read the live state via read_dashboard / dashboard_topk."""
     spark = events_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_dashboard_batch(
-            spark,
-            batch_df,
-            batch_id,
-            sink_root,
-            ts_col,
-            user_col,
-            item_col,
-            depth,
-            width,
-        )
-
-    writer = events_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start(
+        events_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_dashboard_batch(
+            spark, df, batch_id, sink_root, ts_col, user_col, item_col,
+            depth, width,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dashboard_topk(
@@ -321,10 +271,7 @@ _QCELL_SCHEMA = "e int, m bigint, cnt bigint"
 def read_qsketch(spark, sink_root: str) -> DataFrame:
     """The current committed quantile-sketch cell table (empty,
     well-typed, before the first commit)."""
-    cur = current_snapshot_dir(sink_root)
-    if cur is None:
-        return spark.createDataFrame([], _QCELL_SCHEMA)
-    return spark.read.schema(_QCELL_SCHEMA).parquet(cur)
+    return read_current(spark, sink_root, _QCELL_SCHEMA)
 
 
 def apply_qsketch_batch(
@@ -337,26 +284,17 @@ def apply_qsketch_batch(
     scale: int = 100,
 ) -> None:
     """One micro-batch merge for the quantile sketch. Cell counts are
-    ADDITIVE (exactly like CMS), so redelivered batch ids no-op behind
-    the same pointer-id replay guard."""
+    ADDITIVE, exactly like CMS."""
     from ..operators.quantile import qsketch_build, qsketch_merge
 
-    os.makedirs(sink_root, exist_ok=True)
-    cur = current_snapshot_dir(sink_root)
-    if cur is not None:
-        last_id = int(os.path.basename(cur).removeprefix("snap_"))
-        if batch_id <= last_id:
-            return
-    batch_cells = qsketch_build(
-        batch_df, value_col, sub_bits=sub_bits, scale=scale
-    )
-    merged = qsketch_merge(read_qsketch(spark, sink_root), batch_cells)
-    new_dir = os.path.join(sink_root, f"snap_{batch_id}")
-    merged.write.mode("overwrite").parquet(new_dir)
-    tmp = os.path.join(sink_root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"snap_{batch_id}")
-    os.replace(tmp, os.path.join(sink_root, _POINTER))
+    def write(new_dir: str) -> None:
+        batch_cells = qsketch_build(
+            batch_df, value_col, sub_bits=sub_bits, scale=scale
+        )
+        merged = qsketch_merge(read_qsketch(spark, sink_root), batch_cells)
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    commit(sink_root, batch_id, write)
 
 
 def start_qsketch_maintenance(
@@ -366,7 +304,6 @@ def start_qsketch_maintenance(
     checkpoint_path: str,
     sub_bits: int = 8,
     scale: int = 100,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain running quantiles over a stream: the quantile rung's
     streaming twin, completing the sketch family's streaming column
@@ -374,16 +311,11 @@ def start_qsketch_maintenance(
     ingest prefilter). Read live percentiles via read_qsketch +
     operators/quantile.qsketch_quantiles."""
     spark = values_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_qsketch_batch(
-            spark, batch_df, batch_id, value_col, sink_root,
+    return start(
+        values_stream,
+        checkpoint_path,
+        lambda df, batch_id: apply_qsketch_batch(
+            spark, df, batch_id, value_col, sink_root,
             sub_bits=sub_bits, scale=scale,
-        )
-
-    writer = values_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

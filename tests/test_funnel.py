@@ -18,9 +18,11 @@ from gmail_bigquery_etl_spark.queries.events import events_funnel_conversion
 TS0 = pd.Timestamp("2024-03-01 10:00:00")
 
 
-def _write_events(rows) -> str:
-    """rows: (event_id, minutes_offset, user_id, event_type)."""
-    d = tempfile.mkdtemp()
+def _write_events(tmp_path, rows) -> str:
+    """rows: (event_id, minutes_offset, user_id, event_type). Each call
+    gets its own dir under ``tmp_path``: hypothesis runs many examples
+    in one test."""
+    d = tempfile.mkdtemp(dir=tmp_path)
     pdf = pd.DataFrame(
         {
             "event_id": [r[0] for r in rows],
@@ -35,7 +37,7 @@ def _write_events(rows) -> str:
     return d
 
 
-def test_funnel_requires_step_order(spark):
+def test_funnel_requires_step_order(spark, tmp_path):
     rows = [
         # user 1: full ordered funnel in one session.
         (1, 0, 1, "view"),
@@ -55,7 +57,7 @@ def test_funnel_requires_step_order(spark):
         (11, 1, 4, "click"),
         (12, 46, 4, "purchase"),
     ]
-    sf_dir = _write_events(rows)
+    sf_dir = _write_events(tmp_path, rows)
     out = events_funnel_conversion(spark, sf_dir).collect()
     assert len(out) == 1
     r = out[0]
@@ -125,11 +127,11 @@ def _py_funnel(rows):
         max_size=60,
     )
 )
-def test_funnel_matches_python_reference(spark, rows):
+def test_funnel_matches_python_reference(spark, tmp_path, rows):
     rows = [
         (i, m, u, t) for i, (_, m, u, t) in enumerate(rows)
     ]  # unique event ids keep the session order total
-    sf_dir = _write_events(rows)
+    sf_dir = _write_events(tmp_path, rows)
     got = {
         str(r.day.date()): (
             r.n_sessions,

@@ -596,6 +596,55 @@ def test_streaming_near_dup_ingest_matches_sequential_batch(spark, tmp_path):
     assert not any(d >= 400000 for d in got)
 
 
+def test_near_dup_ingest_restart_in_crash_window(spark, tmp_path):
+    """A crash after the sink's pointer swap but before the stream's
+    checkpoint commit: the restart redelivers the last batch, which the
+    sink already holds. The pointer and the sink rows must stay as they
+    were -- rewriting the snapshot the batch reads would fail the
+    restart and lose the data."""
+    from gmail_bigquery_etl_spark.streaming.dedup_ingest import (
+        start_near_dup_ingest,
+    )
+    from gmail_bigquery_etl_spark.streaming.merge_sink import (
+        current_snapshot_dir,
+    )
+
+    docs = (
+        load_table(spark, SMOKE_SF, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 40)
+    )
+    src = str(tmp_path / "src")
+    for part in (docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")):
+        time.sleep(0.05)  # distinct mtimes: the file source orders by them
+        part.coalesce(1).write.mode("append").parquet(src)
+    sink_root = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = start_near_dup_ingest(stream, sink_root, ckpt)
+        q.awaitTermination(300)
+        assert not q.isActive
+
+    run()
+    pointer = current_snapshot_dir(sink_root)
+    rows = sorted(spark.read.parquet(pointer).collect())
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+    run()
+    assert current_snapshot_dir(sink_root) == pointer
+    assert sorted(spark.read.parquet(pointer).collect()) == rows
+
+
 def test_custom_timeout_sessionizer_matches_batch(spark, replay_dir, tmp_path):
     """Hand-rolled EventTimeTimeout sessionizer (streaming/sessions.py):
     every emitted session must equal a batch gaps-and-islands session

@@ -12,12 +12,20 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# The package must import in the driver AND in Spark's Python workers
+# (applyInPandasWithState, UDFs), whatever the working directory: workers
+# inherit PYTHONPATH from the JVM, which inherits it from this process.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from gmail_bigquery_etl_spark.schemas import FIXTURE_TABLES  # noqa: E402
 
