@@ -33,7 +33,13 @@ def _qid(name: str) -> str:
     resolving -- and names that are not plain identifiers (spaces,
     hyphens, leading digits), which F.col accepted, now parse instead of
     erroring or misparsing. The resolved plan is unchanged for names
-    that already parsed."""
+    that already parsed.
+
+    Contract: a name must not contain a literal dot. Every ``.`` is read
+    as an ``alias.col`` separator, so a column literally named ``a.b``
+    would resolve as column ``b`` of alias ``a`` (or fail to parse);
+    pass such a column as a Column (``F.col("`a.b`")``), which keeps the
+    structured path."""
     return ".".join(
         "`" + seg.replace("`", "``") + "`" for seg in name.split(".")
     )

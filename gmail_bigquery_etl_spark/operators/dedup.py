@@ -778,6 +778,12 @@ def prefix_filter_jaccard_pairs(
         .withColumn("sz", F.size("arr"))
         .localCheckpoint()
     )
+    # toks is not pinned although both sides of the prefix self-join read
+    # it: AQE reuses its two window shuffles for the second side (the
+    # executed sf0.1 plan holds 2 ReusedExchange), and only the Sort +
+    # Window above them run once per side. The static plan pair
+    # plans/r12/dedup_jaccard_prefix_filter_{before,after}.txt shows the
+    # two collect_set shuffles gone but cannot show runtime reuse.
     toks = (
         docs_arr.select("_id", "sz", F.explode("arr").alias("g"))
         .withColumn("_df", F.count("*").over(W.partitionBy("g")))

@@ -124,7 +124,8 @@ def orders_item_cf_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key), and which the per-customer cap window AND the co-occurrence
     # self-join then reuse verbatim -- the plan drops the separate
     # (cust, item) exchange the bare distinct() planned before its
-    # cust-keyed consumers (3 Exchange -> 2 in the committed plan pair).
+    # cust-keyed consumers (shuffle Exchanges 17 -> 14 at sf0.1 in
+    # plans/r12/orders_item_cf_recs_{before,after}.txt).
     # Results are unchanged: distinct is partitioning-independent.
     baskets = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])

@@ -19,26 +19,23 @@ scan as a Spark 4 ``pyspark.sql.datasource.DataSource``:
   catalog-level pushdown Spark drives), unsupported filters handed back
   for post-scan evaluation,
 * a ``headers`` option restricting which header structs are built -- the
-  reference's ``metadataHeaders`` projection (S2).
+  reference's ``metadataHeaders`` projection (S2),
+* a ``limit`` option capping the rows each partition of a BATCH read
+  serves (the page loop stops requesting pages once it is met); stream
+  reads ignore it.
 
-The pagination/pushdown/partitioning machinery is GENERIC; what any one
-remote API looks like lives behind a ``ScanBackend`` (selected with
-``option("backend", name)``, registered via ``register_backend``): the
-backend owns the output schema, the raw columns to scan, the pushed scan
-filter, and the vectorized page renderer. The default ``gmail_events``
-backend is a deterministic in-process fake backed by the driver's
+The "API" is a deterministic in-process fake backed by the driver's
 ``events`` parquet (option ``path``): each event renders into exactly the
 same Gmail-shaped message the synthetic DataFrame source builds
 (sources/synthetic.py messages_from_events_df), so the DuckDB oracle for
 the ingest pipeline is one shared spec for both paths. Rows with
 ``event_id % 7 == 0`` are served twice (pages re-deliver messages, as a
-real at-least-once API can) -- downstream per-id dedup handles it. A
-minimal ``raw_events`` backend ships alongside it as the template for
-pointing the source at a differently-shaped API.
+real at-least-once API can) -- downstream per-id dedup handles it.
 """
 
 from __future__ import annotations
 
+import re
 import time
 from dataclasses import dataclass
 from typing import Iterator
@@ -87,6 +84,10 @@ _LABELS_BY_TYPE = {
     "click": ["TRASH"],
 }
 _DEFAULT_HEADERS = "Subject,From,To,Date"
+_RAW_COLUMNS = ["event_id", "ts", "user_id", "event_type"]
+# A message id is "m<event_id>" in canonical decimal form: "m01" or "m²"
+# names no message, so it must not reach the event_id scan filter.
+_MESSAGE_ID = re.compile(r"m(0|[1-9][0-9]*)")
 
 
 def parse_label_query(q: str) -> tuple[set[str], set[str]]:
@@ -108,74 +109,125 @@ def parse_label_query(q: str) -> tuple[set[str], set[str]]:
 
 @dataclass
 class _TokenPartition(InputPartition):
+    """One token's slice of raw events, read from ``start`` up to ``end``
+    (exclusive; ``None`` = to the end) in deterministic event order,
+    serving at most ``cap`` rendered rows (``None`` = no cap)."""
+
     token_idx: int
     num_tokens: int
+    start: int = 0
+    end: int | None = None
+    cap: int | None = None
 
 
-def _token_fanout(token_idx: int, num_tokens: int):
-    """Arrow expression for the per-token user fan-out (user_id mod
-    num_tokens; Arrow expressions have no %, so spelled via truncating
-    int division -- user ids are non-negative)."""
-    import pyarrow.compute as pc
-
-    f_user = pc.field("user_id")
-    return (f_user - (f_user / num_tokens).cast("int64") * num_tokens) == token_idx
-
-
-class ScanBackend:
-    """What ONE concrete paginated API looks like, behind the generic
-    pagination / pushdown / partition-planning machinery of
-    ``PaginatedApiReader``. A backend owns:
-
-    * ``schema`` -- the rendered output rows' Spark schema (must expose an
-      ``id`` string column for the reader's id-filter pushdown contract),
-    * ``columns`` -- the raw columns its scan reads,
-    * ``scan_filter(token_idx, num_tokens, id_allow)`` -- the FULL pushed
-      Arrow filter for one token partition (fan-out + translated id
-      filter + any backend-side predicate),
-    * ``render(pdf, id_allow)`` -- one fetched raw page -> one rendered
-      ``pyarrow.RecordBatch`` in ``schema`` shape (vectorized; must
-      re-enforce its predicates row-wise so it is correct standalone).
-
-    Select with ``option("backend", name)``; add new ones with
-    ``register_backend`` -- the reader itself never changes.
-    """
-
-    schema: StructType
-    columns: list[str]
-
+class PaginatedApiReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
         self.path = options["path"]
-
-    def scan_filter(self, token_idx: int, num_tokens: int, id_allow):
-        raise NotImplementedError
-
-    def render(self, pdf, id_allow):
-        raise NotImplementedError
-
-
-BACKENDS: dict[str, type[ScanBackend]] = {}
-
-
-def register_backend(name: str, cls: type[ScanBackend]) -> None:
-    """Register a ScanBackend under an ``option("backend", ...)`` name."""
-    BACKENDS[name] = cls
-
-
-class GmailEventsBackend(ScanBackend):
-    """The default backend: renders the driver's ``events`` parquet into
-    Gmail-shaped messages (the reference's messages.list/messages.get
-    surface, etl_service/main.py:147-217)."""
-
-    schema = MESSAGE_SCHEMA
-    columns = ["event_id", "ts", "user_id", "event_type"]
-
-    def __init__(self, options: dict) -> None:
-        super().__init__(options)
-        include, exclude = parse_label_query(options.get("q", ""))
-        self.include, self.exclude = include, exclude
+        self.include, self.exclude = parse_label_query(options.get("q", ""))
         header_opt = options.get("headers", _DEFAULT_HEADERS)
         self.wanted_headers = [h.strip() for h in header_opt.split(",") if h.strip()]
+        self.page_size = int(options.get("page_size", "500"))
+        self.num_tokens = int(options.get("tokens", "3"))
+        self.throttle_ms = int(options.get("throttle_ms", "0"))
+        # Pushed row limit (per partition). The Python DataSource API has no
+        # SupportsPushDownLimit hook yet, so the limit arrives as an option;
+        # the page loop stops REQUESTING pages once it is satisfied -- the
+        # paginated-API analog of Spark's LocalLimit (each partition serves
+        # at most `limit` rows; the global limit still trims on the driver).
+        limit_opt = options.get("limit")
+        self.limit: int | None = int(limit_opt) if limit_opt is not None else None
+        self.id_allow: set[str] | None = None  # None = no pushed id filter
+
+    def pushFilters(self, filters: list[Filter]) -> list[Filter]:
+        """Accept id equality+IN and id/threadId IsNotNull; everything else
+        is returned for Spark to evaluate after the scan. Eager (not a
+        generator): the accepted-filter state must exist before Spark
+        pickles this reader out to the executors."""
+        self.pushed: list[Filter] = []
+        unsupported: list[Filter] = []
+        for f in filters:
+            if isinstance(f, EqualTo) and f.attribute == ("id",):
+                self.id_allow = {f.value}
+                self.pushed.append(f)
+            elif isinstance(f, In) and f.attribute == ("id",):
+                self.id_allow = set(f.value)
+                self.pushed.append(f)
+            elif isinstance(f, IsNotNull) and f.attribute in (("id",), ("threadId",)):
+                self.pushed.append(f)  # never null here: accept, emit all
+            else:
+                unsupported.append(f)
+        return unsupported
+
+    def partitions(self) -> list[_TokenPartition]:
+        # A pushed point filter (id = / id IN) bounds the answer to at most
+        # |id_allow| messages; the full per-token fan-out would pay
+        # num_tokens x (Python worker spin-up + Arrow scanner setup) to
+        # serve mostly-empty slices. One partition spanning every token
+        # (num_tokens=1 makes the user_id-mod fan-out filter pass all rows)
+        # returns the identical row set from a single task. Spark calls
+        # pushFilters before partitions, so id_allow is settled here.
+        if self.id_allow is not None and len(self.id_allow) <= 10_000:
+            # `limit` is documented as PER-PARTITION: the pre-collapse plan
+            # could serve up to limit*num_tokens rows, so the single
+            # surviving partition carries the scaled cap and the collapse
+            # stays a pure plan optimization (same row set, fewer tasks).
+            # The cap rides in the partition, not on the reader: Spark
+            # pickles the reader for the executors BEFORE it calls
+            # partitions(), so a change to the reader here never reaches
+            # them.
+            cap = None if self.limit is None else self.limit * self.num_tokens
+            return [_TokenPartition(0, 1, cap=cap)]
+        return [
+            _TokenPartition(i, self.num_tokens, cap=self.limit)
+            for i in range(self.num_tokens)
+        ]
+
+    def read(self, partition: _TokenPartition) -> Iterator:
+        """Lazy page loop: yields pyarrow RecordBatches, one per page (the
+        Spark 4 Python DataSource arrow fast path -- no per-row tuple
+        pickling between the reader and the worker's arrow serializer).
+
+        Laziness is the point -- a consumer that stops (Spark's LocalLimit,
+        or the partition's ``cap``) stops the underlying scanner, so
+        unneeded pages are never fetched, matching a real paginated API
+        where the next pageToken is simply never requested.
+        """
+        import pyarrow.dataset as ds
+
+        # Fetch/render coarse (vectorization amortizes the per-call pandas
+        # cost -- 500-row render units were 5x slower end-to-end), then
+        # slice the rendered batch into page_size pages for the API's
+        # page/throttle/limit semantics. True fetch laziness is bounded by
+        # the parquet row-group size regardless of batch_size, so coarse
+        # fetching gives up nothing real.
+        scanner = ds.dataset(self.path).scanner(
+            columns=_RAW_COLUMNS,
+            filter=self._scan_filter(partition.token_idx, partition.num_tokens),
+            batch_size=max(self.page_size, 16384),
+        )
+        start, end, remaining = partition.start, partition.end, partition.cap
+        seen = 0  # raw events of this token's slice scanned so far
+        first = True
+        for batch in scanner.to_batches():
+            lo = max(0, start - seen)
+            hi = batch.num_rows if end is None else min(batch.num_rows, end - seen)
+            seen += batch.num_rows
+            if hi > lo:
+                # redelivered dupes are rendered with (and ride in) their page
+                rendered = self._render(batch.slice(lo, hi - lo).to_pandas())
+                for off in range(0, rendered.num_rows, self.page_size):
+                    if remaining == 0:
+                        return
+                    if not first and self.throttle_ms:
+                        time.sleep(self.throttle_ms / 1000.0)
+                    first = False
+                    page = rendered.slice(off, self.page_size)
+                    if remaining is not None:
+                        page = page.slice(0, remaining)
+                        remaining -= page.num_rows
+                    yield page
+            if remaining == 0 or (end is not None and seen >= end):
+                return
 
     def _labels_pass(self, labels: list[str]) -> bool:
         """Evaluate the parsed label query against one label set."""
@@ -185,61 +237,61 @@ class GmailEventsBackend(ScanBackend):
             return False
         return True
 
-    def scan_filter(self, token_idx: int, num_tokens: int, id_allow):
+    def _scan_filter(self, token_idx: int, num_tokens: int):
         """ALL source-side predicates, pushed into the Arrow scan so each
         token partition decodes only its own slice (a full-table read per
-        partition was num_tokens-times redundant I/O):
-          * the token fan-out,
+        partition was num_tokens-times redundant I/O). It is the one place
+        they are enforced; ``_render`` trusts its input:
+          * the token fan-out, user_id mod num_tokens (Arrow expressions
+            have no %, so spelled via truncating int division -- user ids
+            are non-negative),
           * pushed id equality/IN filters (ids are "m<event_id>"),
           * the label query, folded to an event_type membership test
             (labels are a pure function of event_type; unknown types get
             the DRAFT default and pass iff DRAFT passes).
         """
+        import pyarrow as pa
         import pyarrow.compute as pc
 
-        expr = _token_fanout(token_idx, num_tokens)
-        if id_allow is not None:
-            eids = [int(i[1:]) for i in id_allow if i[:1] == "m" and i[1:].isdigit()]
+        f_user = pc.field("user_id")
+        expr = (f_user - (f_user / num_tokens).cast("int64") * num_tokens) == token_idx
+        if self.id_allow is not None:
+            eids = [
+                int(m.group(1))
+                for i in self.id_allow
+                if isinstance(i, str) and (m := _MESSAGE_ID.fullmatch(i))
+            ]
+            eids = pa.array([e for e in eids if e < 2**63], pa.int64())
             expr = expr & pc.field("event_id").isin(eids)
         known = list(_LABELS_BY_TYPE)
         allowed = [t for t, ls in _LABELS_BY_TYPE.items() if self._labels_pass(ls)]
         default_pass = self._labels_pass(["DRAFT"])
         if len(allowed) < len(known) or not default_pass:
-            type_expr = pc.field("event_type").isin(allowed)
+            # typed: an empty untyped value set does not bind to a string
+            type_expr = pc.field("event_type").isin(pa.array(allowed, pa.string()))
             if default_pass:
                 type_expr = type_expr | ~pc.field("event_type").isin(known)
             expr = expr & type_expr
         return expr
 
-    def render(self, df, id_allow):
-        """Render one page of raw events into a Gmail-shaped message
-        RecordBatch, fully vectorized: the headers list<struct> column is
-        assembled from flat name/value arrays + offsets (ListArray), not a
-        per-row Python loop -- the renderer stays O(columns), and the batch
-        goes straight onto Spark's arrow channel."""
+    def _render(self, df):
+        """Render one fetched slice of raw events into a Gmail-shaped
+        message RecordBatch, fully vectorized: the headers list<struct>
+        column is assembled from flat name/value arrays + offsets
+        (ListArray), not a per-row Python loop -- the renderer stays
+        O(columns), and the batch goes straight onto Spark's arrow
+        channel."""
         import numpy as np
         import pandas as pd
         import pyarrow as pa
 
         # at-least-once redelivery of every 7th message, like the synthetic df
         df = pd.concat([df, df[df["event_id"] % 7 == 0]], ignore_index=True)
-
-        # re-check the label/id predicates row-wise (the scan filter already
-        # guarantees them; this keeps the renderer correct standalone)
         labels_col = df["event_type"].map(
             lambda t: _LABELS_BY_TYPE.get(t, ["DRAFT"])
         )
-        keep = pd.Series(True, index=df.index)
-        if self.include:
-            keep &= labels_col.map(lambda ls: bool(set(ls) & self.include))
-        if self.exclude:
-            keep &= labels_col.map(lambda ls: not (set(ls) & self.exclude))
         eid = df["event_id"]
         ids = "m" + eid.astype(str)
-        if id_allow is not None:
-            keep &= ids.isin(id_allow)
-        df, ids, labels_col = df[keep], ids[keep], labels_col[keep]
-        eid = df["event_id"]
         n = len(df)
 
         threads = "t" + df["user_id"].astype(str)
@@ -300,188 +352,6 @@ class GmailEventsBackend(ScanBackend):
         )
 
 
-class RawEventsBackend(ScanBackend):
-    """Minimal second backend: serves events rows nearly as-is (id =
-    "e<event_id>"). Exists to prove -- and test -- that the reader's
-    pagination/pushdown/partitioning machinery is backend-agnostic, and as
-    the template for pointing the source at a differently-shaped API."""
-
-    schema = StructType(
-        [
-            StructField("id", StringType(), False),
-            StructField("event_type", StringType(), True),
-        ]
-    )
-    columns = ["event_id", "user_id", "event_type"]
-
-    def scan_filter(self, token_idx: int, num_tokens: int, id_allow):
-        import pyarrow.compute as pc
-
-        expr = _token_fanout(token_idx, num_tokens)
-        if id_allow is not None:
-            eids = [int(i[1:]) for i in id_allow if i[:1] == "e" and i[1:].isdigit()]
-            expr = expr & pc.field("event_id").isin(eids)
-        return expr
-
-    def render(self, df, id_allow):
-        import pyarrow as pa
-
-        ids = "e" + df["event_id"].astype(str)
-        if id_allow is not None:
-            keep = ids.isin(id_allow)
-            df, ids = df[keep], ids[keep]
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(ids.to_numpy(dtype=object), type=pa.string()),
-                pa.array(df["event_type"].to_numpy(dtype=object), type=pa.string()),
-            ],
-            names=["id", "event_type"],
-        )
-
-
-register_backend("gmail_events", GmailEventsBackend)
-register_backend("raw_events", RawEventsBackend)
-
-
-def _make_backend(options: dict) -> ScanBackend:
-    name = options.get("backend", "gmail_events")
-    if name not in BACKENDS:
-        raise ValueError(
-            f"unknown paginated_api backend {name!r}; "
-            f"registered: {sorted(BACKENDS)}"
-        )
-    return BACKENDS[name](options)
-
-
-class PaginatedApiReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.backend = _make_backend(options)
-        self.path = self.backend.path
-        self.page_size = int(options.get("page_size", "500"))
-        self.num_tokens = int(options.get("tokens", "3"))
-        self.throttle_ms = int(options.get("throttle_ms", "0"))
-        # Pushed row limit (per partition). The Python DataSource API has no
-        # SupportsPushDownLimit hook yet, so the limit arrives as an option;
-        # the page loop stops REQUESTING pages once it is satisfied -- the
-        # paginated-API analog of Spark's LocalLimit (each partition serves
-        # at most `limit` rows; the global limit still trims on the driver).
-        # When a pushed id filter collapses the plan to one partition (see
-        # partitions()), the surviving partition's cap is scaled by
-        # num_tokens so the total cap is unchanged by the collapse.
-        limit_opt = options.get("limit")
-        self.limit: int | None = int(limit_opt) if limit_opt is not None else None
-        self.id_allow: set[str] | None = None  # None = no pushed id filter
-
-    def pushFilters(self, filters: list[Filter]) -> list[Filter]:
-        """Accept id equality+IN and id/threadId IsNotNull; everything else
-        is returned for Spark to evaluate after the scan. Eager (not a
-        generator): the accepted-filter state must exist before Spark
-        pickles this reader out to the executors."""
-        self.pushed: list[Filter] = []
-        unsupported: list[Filter] = []
-        for f in filters:
-            if isinstance(f, EqualTo) and f.attribute == ("id",):
-                self.id_allow = {f.value}
-                self.pushed.append(f)
-            elif isinstance(f, In) and f.attribute == ("id",):
-                self.id_allow = set(f.value)
-                self.pushed.append(f)
-            elif isinstance(f, IsNotNull) and f.attribute in (("id",), ("threadId",)):
-                self.pushed.append(f)  # never null here: accept, emit all
-            else:
-                unsupported.append(f)
-        return unsupported
-
-    def partitions(self) -> list[_TokenPartition]:
-        # A pushed point filter (id = / id IN) bounds the answer to at most
-        # |id_allow| messages; the full per-token fan-out would pay
-        # num_tokens x (Python worker spin-up + Arrow scanner setup) to
-        # serve mostly-empty slices. One partition spanning every token
-        # (num_tokens=1 makes the user_id-mod fan-out filter pass all rows)
-        # returns the identical row set from a single task. Spark calls
-        # pushFilters before partitions, so id_allow is settled here.
-        if self.id_allow is not None and len(self.id_allow) <= 10_000:
-            # `limit` is documented as PER-PARTITION: the pre-collapse plan
-            # could serve up to limit*num_tokens rows, so scale the single
-            # surviving partition's cap to keep the collapse a pure plan
-            # optimization (same row set, fewer tasks) even when a reader
-            # combines .option("limit", N) with an id IN list of >N ids.
-            if self.limit is not None:
-                self.limit *= self.num_tokens
-            return [_TokenPartition(0, 1)]
-        return [
-            _TokenPartition(i, self.num_tokens) for i in range(self.num_tokens)
-        ]
-
-    def read(self, partition: _TokenPartition) -> Iterator:
-        """Yields pyarrow RecordBatches (one per page): the Spark 4 Python
-        DataSource arrow fast path -- no per-row tuple pickling between the
-        reader and the worker's arrow serializer."""
-        yield from self._pages(partition)
-
-    def _scan_filter(self, partition: _TokenPartition):
-        """The backend's full pushed filter for one token partition."""
-        return self.backend.scan_filter(
-            partition.token_idx, partition.num_tokens, self.id_allow
-        )
-
-    def _pages(self, partition: _TokenPartition) -> Iterator:
-        """Lazy page loop: one rendered RecordBatch per fetched Arrow batch.
-
-        Laziness is the point -- a consumer that stops (Spark's LocalLimit,
-        or the pushed ``limit`` option) stops the underlying scanner, so
-        unneeded pages are never fetched, matching a real paginated API
-        where the next pageToken is simply never requested.
-        """
-        import pyarrow.dataset as ds
-
-        # Fetch/render coarse (vectorization amortizes the per-call pandas
-        # cost -- 500-row render units were 5x slower end-to-end), then
-        # slice the rendered batch into page_size pages for the API's
-        # page/throttle/limit semantics. True fetch laziness is bounded by
-        # the parquet row-group size regardless of batch_size, so coarse
-        # fetching gives up nothing real.
-        scanner = ds.dataset(self.path).scanner(
-            columns=self.backend.columns,
-            filter=self._scan_filter(partition),
-            batch_size=max(self.page_size, 16384),
-        )
-        remaining = self.limit
-        first = True
-        for batch in scanner.to_batches():
-            if remaining is not None and remaining <= 0:
-                return
-            if batch.num_rows == 0:
-                continue
-            rendered = self._render_batch(batch.to_pandas())
-            if rendered.num_rows == 0:
-                continue
-            for off in range(0, rendered.num_rows, self.page_size):
-                if remaining is not None and remaining <= 0:
-                    return
-                if not first and self.throttle_ms:
-                    time.sleep(self.throttle_ms / 1000.0)
-                first = False
-                page = rendered.slice(off, self.page_size)
-                if remaining is not None:
-                    page = page.slice(0, remaining)
-                    remaining -= page.num_rows
-                yield page
-
-    def _render_batch(self, df):
-        """Delegate to the backend's vectorized renderer (kept as a method
-        so unit tests and the streaming reader share one entry point)."""
-        return self.backend.render(df, self.id_allow)
-
-
-@dataclass
-class _TokenRangePartition(InputPartition):
-    token_idx: int
-    num_tokens: int
-    start: int  # raw-event cursor within this token's slice, inclusive
-    end: int  # exclusive
-
-
 class PaginatedApiStreamReader(DataSourceStreamReader):
     """Streaming form of the paginated scan: the reference's ``while True``
     page loop (etl_service/main.py:163-211) as a partition-planned
@@ -492,80 +362,47 @@ class PaginatedApiStreamReader(DataSourceStreamReader):
     deterministic event order. Planning (driver) only touches metadata --
     per-token slice lengths via a single-column count with the scan filter
     pushed down; the rows themselves are read EXECUTOR-side, one
-    ``_TokenRangePartition`` per token, through the same lazy Arrow page
-    loop as the batch reader (matching its parallelism, unlike the old
+    ``[start, end)`` window partition per token, through the batch
+    reader's lazy page loop (matching its parallelism, unlike the old
     SimpleDataSourceStreamReader form that materialized the whole universe
-    on the driver). Replay of a committed (start, end] range re-plans the
-    same deterministic partitions, so recovery re-serves ranges
+    on the driver). Stream partitions carry no ``cap``: ``limit`` applies
+    to batch reads only. Replay of a committed (start, end] range re-plans
+    the same deterministic partitions, so recovery re-serves ranges
     bit-for-bit; ``latestOffset`` reports the full snapshot length and
     never moves backwards across restarts.
     """
 
     def __init__(self, options: dict) -> None:
-        self._batch = PaginatedApiReader(options)
-        self.page_size = self._batch.page_size
-        self.num_tokens = self._batch.num_tokens
+        self._reader = PaginatedApiReader(options)
+        self.num_tokens = self._reader.num_tokens
         self._max_len: int | None = None
-
-    def _slice_lengths(self) -> int:
-        """Longest per-token raw slice (driver-side metadata count only)."""
-        if self._max_len is None:
-            import pyarrow.dataset as ds
-
-            data = ds.dataset(self._batch.path)
-            self._max_len = max(
-                data.count_rows(
-                    filter=self._batch._scan_filter(
-                        _TokenPartition(i, self.num_tokens)
-                    )
-                )
-                for i in range(self.num_tokens)
-            )
-        return self._max_len
 
     def initialOffset(self) -> dict:
         return {"pos": 0}
 
     def latestOffset(self) -> dict:
-        return {"pos": self._slice_lengths()}
+        """Longest per-token raw slice (driver-side metadata count only)."""
+        if self._max_len is None:
+            import pyarrow.dataset as ds
 
-    def partitions(self, start: dict, end: dict) -> list[_TokenRangePartition]:
+            data = ds.dataset(self._reader.path)
+            self._max_len = max(
+                data.count_rows(filter=self._reader._scan_filter(i, self.num_tokens))
+                for i in range(self.num_tokens)
+            )
+        return {"pos": self._max_len}
+
+    def partitions(self, start: dict, end: dict) -> list[_TokenPartition]:
         lo, hi = start["pos"], end["pos"]
         if hi <= lo:
             return []
         return [
-            _TokenRangePartition(i, self.num_tokens, lo, hi)
+            _TokenPartition(i, self.num_tokens, lo, hi)
             for i in range(self.num_tokens)
         ]
 
-    def read(self, partition: _TokenRangePartition) -> Iterator:
-        """Serve raw events [start, end) of one token's slice, rendered
-        page-at-a-time as RecordBatches (redelivered dupes ride with their
-        page, as in the batch reader)."""
-        import pyarrow.dataset as ds
-
-        r = self._batch
-        scanner = ds.dataset(r.path).scanner(
-            columns=r.backend.columns,
-            filter=r._scan_filter(
-                _TokenPartition(partition.token_idx, partition.num_tokens)
-            ),
-            batch_size=max(self.page_size, 16384),
-        )
-        seen = 0
-        for batch in scanner.to_batches():
-            lo = max(0, partition.start - seen)
-            hi = min(batch.num_rows, partition.end - seen)
-            seen += batch.num_rows
-            if hi <= lo:
-                if seen >= partition.end:
-                    return
-                continue
-            if r.throttle_ms:
-                time.sleep(r.throttle_ms / 1000.0)
-            yield r._render_batch(batch.slice(lo, hi - lo).to_pandas())
-            if seen >= partition.end:
-                return
+    def read(self, partition: _TokenPartition) -> Iterator:
+        return self._reader.read(partition)
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean up; the backing store is immutable
@@ -580,7 +417,7 @@ class PaginatedApiDataSource(DataSource):
         return "paginated_api"
 
     def schema(self) -> StructType:
-        return _make_backend(self.options).schema
+        return MESSAGE_SCHEMA
 
     def reader(self, schema: StructType) -> PaginatedApiReader:
         return PaginatedApiReader(self.options)

@@ -4,6 +4,7 @@ CORRECTNESS harness, TESTDATA.md)."""
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -13,6 +14,7 @@ import pytest
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
+from gmail_bigquery_etl_spark.queries import ALL_QUERIES  # noqa: E402
 from gmail_bigquery_etl_spark.schemas import FIXTURE_TABLES  # noqa: E402
 from gmail_bigquery_etl_spark.session import get_spark  # noqa: E402
 
@@ -43,3 +45,36 @@ def duck():
             )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def empty_sf(spark, tmp_path_factory) -> str:
+    """Every fixture table with its real schema and zero rows -- the state
+    of a freshly-provisioned deployment before the first ingest."""
+    d = str(tmp_path_factory.mktemp("empty_sf"))
+    for t in FIXTURE_TABLES:
+        (
+            spark.read.parquet(f"{SF_DIR}/{t}.parquet")
+            .limit(0)
+            .write.mode("overwrite")
+            .parquet(f"{d}/{t}.parquet")
+        )
+    return d
+
+
+@pytest.fixture(scope="session")
+def empty_corpus(spark, empty_sf):
+    """``empty_corpus(name)``: the registered query built on ``empty_sf``
+    on first call, or the exception its construction raised. Building the
+    whole corpus costs minutes, so the survival sweep (which executes the
+    frames) and the output-type lint (which reads their schemas) share
+    one build."""
+
+    @functools.cache
+    def frame(name: str):
+        try:
+            return ALL_QUERIES[name](spark, empty_sf)
+        except Exception as ex:  # noqa: BLE001 - the sweeps report it
+            return ex
+
+    return frame

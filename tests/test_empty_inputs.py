@@ -8,32 +8,17 @@ schema-inference failures reading empty partitioned sinks."""
 
 from __future__ import annotations
 
-import pytest
-
 from gmail_bigquery_etl_spark.queries import ALL_QUERIES
-from gmail_bigquery_etl_spark.schemas import FIXTURE_TABLES
-
-from .conftest import SF_DIR
 
 
-@pytest.fixture(scope="module")
-def empty_sf(spark, tmp_path_factory) -> str:
-    d = str(tmp_path_factory.mktemp("empty_sf"))
-    for t in FIXTURE_TABLES:
-        (
-            spark.read.parquet(f"{SF_DIR}/{t}.parquet")
-            .limit(0)
-            .write.mode("overwrite")
-            .parquet(f"{d}/{t}.parquet")
-        )
-    return d
-
-
-def test_every_query_survives_empty_corpus(spark, empty_sf):
+def test_every_query_survives_empty_corpus(empty_corpus):
     failures = []
-    for name, fn in ALL_QUERIES.items():
+    for name in ALL_QUERIES:
         try:
-            n = fn(spark, empty_sf).count()
+            df = empty_corpus(name)
+            if isinstance(df, Exception):
+                raise df
+            n = df.count()
             assert n >= 0
         except Exception as ex:  # noqa: BLE001 - collecting a report
             failures.append((name, type(ex).__name__, str(ex).splitlines()[0][:120]))

@@ -9,20 +9,17 @@ warehouse_snapshot_history, the only two driver hash-red rows in rounds
 OUTPUT schema must render them as strings, bigints, or doubles whose
 cross-engine canonicalization is proven stable by 187 driver-green rows.
 
-Schemas are resolved lazily against the zero-row corpus, so the sweep
-costs plan analysis only, no execution beyond sink-constructing queries'
-tiny empty writes.
+Schemas are read from the zero-row corpus frames the empty-input sweep
+(tests/test_empty_inputs.py) also runs (the session's ``empty_corpus``
+fixture), so each query is constructed once for both checks; the lint
+itself costs no execution.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import types as T
 
 from gmail_bigquery_etl_spark.queries import ALL_QUERIES
-from gmail_bigquery_etl_spark.schemas import FIXTURE_TABLES
-
-from .conftest import SF_DIR
 
 # Queries whose output legitimately needs a banned type must be listed
 # here WITH a reason -- the lint fails on any unexplained occurrence.
@@ -43,19 +40,6 @@ def _banned_in(dt: T.DataType) -> bool:
     return False
 
 
-@pytest.fixture(scope="module")
-def empty_sf(spark, tmp_path_factory) -> str:
-    d = str(tmp_path_factory.mktemp("lint_sf"))
-    for t in FIXTURE_TABLES:
-        (
-            spark.read.parquet(f"{SF_DIR}/{t}.parquet")
-            .limit(0)
-            .write.mode("overwrite")
-            .parquet(f"{d}/{t}.parquet")
-        )
-    return d
-
-
 def test_lint_detects_banned_types(spark):
     """Non-vacuity: the detector fires on exactly the shapes that broke
     rounds 6a/6b -- a top-level decimal aggregate and a DATE column --
@@ -69,18 +53,15 @@ def test_lint_detects_banned_types(spark):
     assert flagged == ["bal", "d", "arr"]
 
 
-def test_no_decimal_or_date_output_columns(spark, empty_sf):
+def test_no_decimal_or_date_output_columns(empty_corpus):
     offenders = []
-    for name, fn in sorted(ALL_QUERIES.items()):
-        if name in ALLOWED:
-            continue
-        try:
-            schema = fn(spark, empty_sf).schema
-        except Exception:  # noqa: BLE001 - empty-corpus sweep guards crashes
-            continue
+    for name in sorted(ALL_QUERIES):
+        df = empty_corpus(name)
+        if name in ALLOWED or isinstance(df, Exception):
+            continue  # the empty-corpus sweep reports construction errors
         bad = [
             f"{f.name}:{f.dataType.simpleString()}"
-            for f in schema.fields
+            for f in df.schema.fields
             if _banned_in(f.dataType)
         ]
         if bad:

@@ -16,6 +16,7 @@ from pyspark.sql.datasource import EqualTo, GreaterThan, In
 
 from gmail_bigquery_etl_spark.sources.paginated import (
     PaginatedApiReader,
+    PaginatedApiStreamReader,
     parse_label_query,
     register,
 )
@@ -111,6 +112,34 @@ def test_point_filter_collapse_scales_per_partition_limit():
     assert got == {"m1", "m2", "m5"}
 
 
+def test_point_filter_collapse_keeps_limit_end_to_end(spark):
+    """The collapse's scaled cap must reach the executors. Spark pickles
+    the reader for them before it calls partitions(), so a cap scaled on
+    the reader there would never arrive (one id of three would come
+    back); it has to travel in the partition."""
+    df = _read(spark, tokens=3, limit=1).filter(F.col("id").isin("m1", "m2", "m5"))
+    assert sorted(r.id for r in df.collect()) == ["m1", "m2", "m5"]
+
+
+def test_non_canonical_ids_match_nothing_unit():
+    """The scan filter is the only place the pushed id filter is enforced,
+    so an id that merely parses to an event id ("m01", "m²") must not
+    select that event's message ("m1")."""
+    r = PaginatedApiReader({"path": EVENTS})
+    r.pushFilters([In(attribute=("id",), value=("m01", "m\u00b2", "x1", "m1"))])
+    got = {row[0] for p in r.partitions() for row in _rows(r, p)}
+    assert got == {"m1"}
+
+
+def test_label_query_matching_no_known_type_unit():
+    """A query no known event type satisfies ("in:draft") keeps only the
+    DRAFT-labelled messages of unknown types (an empty allowed-type set
+    still binds to the string column)."""
+    r = PaginatedApiReader({"path": EVENTS, "q": "in:draft"})
+    labels = [row[3] for p in r.partitions() for row in _rows(r, p)]
+    assert labels and all(ls == ["DRAFT"] for ls in labels)
+
+
 def test_id_filter_pushdown_end_to_end(spark):
     df = _read(spark, tokens=2).filter(F.col("id") == "m5")
     rows = df.collect()
@@ -186,12 +215,14 @@ def test_limit_stops_paging_unit():
         {"path": EVENTS, "page_size": str(page_size), "limit": str(limit), "tokens": "1"}
     )
     (part,) = r.partitions()
-    pages = list(r._pages(part))
+    pages = list(r.read(part))
     assert len(pages) <= math.ceil(limit / page_size)
     assert sum(p.num_rows for p in pages) == limit
-    # unlimited reader serves strictly more
+    # unlimited reader serves strictly more (through its own, uncapped
+    # partition: the cap travels in the partition, not on the reader)
     full = PaginatedApiReader({"path": EVENTS, "tokens": "1"})
-    assert sum(b.num_rows for b in full.read(part)) > limit
+    (full_part,) = full.partitions()
+    assert sum(b.num_rows for b in full.read(full_part)) > limit
 
 
 def test_limit_option_end_to_end(spark):
@@ -208,10 +239,29 @@ def test_lazy_pages_fetch_nothing_beyond_consumption():
     for)."""
     r = PaginatedApiReader({"path": EVENTS, "page_size": "10", "tokens": "1"})
     (part,) = r.partitions()
-    gen = r._pages(part)
+    gen = r.read(part)
     first = next(gen)
     assert 0 < first.num_rows <= 12  # one batch (+ redelivered dupes)
     gen.close()  # no error: scanner abandoned without draining
+
+
+def test_stream_windows_cover_batch_read_unit():
+    """Offset windows are a disjoint cover: splitting [0, latestOffset) at
+    its midpoint serves, across both windows, exactly the batch reader's
+    rows (a micro-batch boundary loses and repeats nothing)."""
+    opts = {"path": EVENTS, "tokens": "2", "page_size": "7"}
+    stream = PaginatedApiStreamReader(opts)
+    start, end = stream.initialOffset(), stream.latestOffset()
+    mid = {"pos": end["pos"] // 2}
+    assert 0 < mid["pos"] < end["pos"]
+    windowed = sorted(
+        str(row)
+        for lo, hi in ((start, mid), (mid, end))
+        for p in stream.partitions(lo, hi)
+        for row in _rows(stream, p)
+    )
+    batch = PaginatedApiReader(opts)
+    assert windowed == sorted(str(x) for p in batch.partitions() for x in _rows(batch, p))
 
 
 def test_stream_restart_from_checkpoint_adds_nothing(spark, tmp_path):
@@ -259,77 +309,3 @@ def test_page_size_batching_unit():
         str(x) for p in small.partitions() for x in _rows(small, p)
     )
     assert rows_big == rows_small
-
-
-# --- backend injection (ScanBackend registry) --------------------------------
-
-def test_raw_events_backend_end_to_end(spark):
-    """The generic machinery serves a DIFFERENT backend through the same
-    format: schema comes from the backend, ids are backend-rendered, and
-    the token fan-out still covers every row exactly once."""
-    import duckdb
-
-    df = _read(spark, backend="raw_events", tokens=3)
-    assert df.columns == ["id", "event_type"]
-    n_events = duckdb.sql(f"SELECT COUNT(*) FROM '{EVENTS}'").fetchone()[0]
-    rows = df.collect()
-    assert len(rows) == n_events  # no gmail %7 redelivery in this backend
-    assert all(r.id.startswith("e") for r in rows[:5])
-
-
-def test_raw_events_backend_id_pushdown(spark):
-    """Pushed id filters route through the backend's own id translation
-    ('e<event_id>', not the gmail 'm' scheme)."""
-    rows = (
-        _read(spark, backend="raw_events", tokens=2)
-        .filter(F.col("id") == "e5")
-        .collect()
-    )
-    assert [r.id for r in rows] == ["e5"]
-
-
-def test_register_custom_backend():
-    """A user-registered backend slots into the reader with no reader
-    changes: the machinery asks IT for columns/filter/render."""
-    import pyarrow as pa
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from gmail_bigquery_etl_spark.sources.paginated import (
-        BACKENDS,
-        ScanBackend,
-        _token_fanout,
-        register_backend,
-    )
-
-    class TypesOnlyBackend(ScanBackend):
-        schema = StructType([StructField("id", StringType(), False)])
-        columns = ["event_id", "user_id"]
-
-        def scan_filter(self, token_idx, num_tokens, id_allow):
-            return _token_fanout(token_idx, num_tokens)
-
-        def render(self, df, id_allow):
-            ids = "x" + df["event_id"].astype(str)
-            return pa.RecordBatch.from_arrays(
-                [pa.array(ids.to_numpy(dtype=object), type=pa.string())],
-                names=["id"],
-            )
-
-    register_backend("types_only", TypesOnlyBackend)
-    try:
-        r = PaginatedApiReader(
-            {"path": EVENTS, "backend": "types_only", "tokens": "2"}
-        )
-        parts = r.partitions()
-        assert len(parts) == 2
-        got = [row[0] for p in parts for row in _rows(r, p)]
-        assert len(got) == len(set(got)) and all(i[0] == "x" for i in got)
-    finally:
-        BACKENDS.pop("types_only")
-
-
-def test_unknown_backend_rejected():
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown paginated_api backend"):
-        PaginatedApiReader({"path": EVENTS, "backend": "nope"})

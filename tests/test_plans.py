@@ -8,6 +8,8 @@ products anywhere in the declared corpus.
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,11 +18,25 @@ from gmail_bigquery_etl_spark.queries import ALL_QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name: str) -> str:
+def _build(spark, name: str):
+    """A query at SF and its physical plan string, taken before any
+    execution."""
     spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     df = ALL_QUERIES[name](spark, SF)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return df, df._jdf.queryExecution().executedPlan().toString()
+
+
+def _plan(spark, name: str) -> str:
+    return _build(spark, name)[1]
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    """``corpus(name)``: ``_build`` once per query. The cartesian guard
+    reads every plan, then the NLJ bound check executes the allowlisted
+    frames, so the corpus is built once for both."""
+    return functools.cache(lambda name: _build(spark, name))
 
 
 def test_q6_filters_and_projection_reach_scan(spark):
@@ -224,14 +240,14 @@ _ALLOWED_NLJ = {
 _NLJ_BUILD_BOUND = 4096
 
 
-def test_no_accidental_cartesian_products(spark):
+def test_no_accidental_cartesian_products(corpus):
     """Cross-join shapes are allowed ONLY where declared intentional:
     join_cross_theta (explicit NLJ over dims) and the brute-force/blocked
     similarity baselines (broadcast NLJ over a bounded query block).
     Everything else must be equi-join shaped."""
     offenders = []
     for name in ALL_QUERIES:
-        plan = _plan(spark, name)
+        _, plan = corpus(name)
         if "CartesianProduct" in plan:
             offenders.append((name, "CartesianProduct"))
         if "BroadcastNestedLoopJoin" in plan and name not in _ALLOWED_NLJ:
@@ -239,7 +255,7 @@ def test_no_accidental_cartesian_products(spark):
     assert not offenders, offenders
 
 
-def test_allowlisted_nlj_build_sides_are_bounded(spark):
+def test_allowlisted_nlj_build_sides_are_bounded(corpus):
     """The allowlist's annotations, machine-checked: EXECUTE every
     allowlisted query and assert the broadcast build side of each of its
     nested-loop joins actually produced <= _NLJ_BUILD_BOUND rows. A
@@ -249,7 +265,8 @@ def test_allowlisted_nlj_build_sides_are_bounded(spark):
 
     offenders = []
     for name in sorted(_ALLOWED_NLJ):
-        rows = nlj_build_side_rows(ALL_QUERIES[name](spark, SF))
+        df, _ = corpus(name)
+        rows = nlj_build_side_rows(df)
         bad = [r for r in rows if r > _NLJ_BUILD_BOUND]
         if bad:
             offenders.append((name, rows))
