@@ -17,6 +17,12 @@ Layout:
                  ingest, and the snapshot-pointer sinks (snapshots.py)
   queries/    -- declared query corpus with DuckDB-oracle SQL strings;
                  queries/pipeline.py holds the training-pipeline queries
+  _zipimport_cache -- keeps Python workers (< 3.13) from re-reading
+                 pyspark.zip on every call; installed on import
 """
+
+from gmail_bigquery_etl_spark import _zipimport_cache
+
+_zipimport_cache.install()
 
 __version__ = "0.1.0"

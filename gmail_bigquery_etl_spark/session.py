@@ -9,6 +9,8 @@ the same logical plans survive a 1000-executor cluster at 100 TB:
   partitioning from the 64 MB advisory target instead of a fixed number.
 * Arrow enabled: every Pandas-UDF boundary is vectorized, never per-row.
 * Session timezone pinned UTC so timestamp semantics match the DuckDB oracle.
+* Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else min(24g, half of
+  physical memory), so two local sessions side by side fit the host.
 """
 
 from __future__ import annotations
@@ -16,6 +18,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _driver_memory() -> str:
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (AttributeError, OSError, ValueError):
+        return "24g"
+    return "24g" if half_mb >= 24 * 1024 else f"{half_mb}m"
 
 
 def get_spark(
@@ -38,7 +51,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

@@ -29,7 +29,12 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
+    # SPARK_GRAFT_CPUS is nproc in the tier-1 command; capped at local[8] so
+    # a large host does not grow the suite past its long-standing size.
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_TEST_CPUS")
+        or min(8, int(os.environ.get("SPARK_GRAFT_CPUS") or "8"))
+    )
     return get_spark("tests", cpus=cpus, shuffle_partitions=cpus)
 
 
