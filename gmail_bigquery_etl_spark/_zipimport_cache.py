@@ -13,8 +13,9 @@ spent about 0.5 s there, and every Python task paid 0.15-0.5 s more.
 
 Python 3.13 made the method lazy: it only drops the shared
 ``_zip_directory_cache`` entry, and ``zipimporter._get_files`` re-reads the
-archive on its next lookup. This module gives older interpreters the same
-cost for an unchanged archive. It keeps one ``(st_ino, st_size,
+archive on its next lookup, once for all importers. This module goes one
+step further on older interpreters: an unchanged archive is not re-read at
+all. It keeps one ``(st_ino, st_size,
 st_mtime_ns)`` stamp per archive path. While the stamp is the one taken at
 the archive's last read, ``invalidate_caches`` points the importer at the
 shared directory and returns; otherwise it runs the stdlib method, which

@@ -29,8 +29,8 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    # SPARK_GRAFT_CPUS is nproc in the tier-1 command; capped at local[8] so
-    # a large host does not grow the suite past its long-standing size.
+    # Follows SPARK_GRAFT_CPUS, capped at local[8] so a large host does not
+    # grow the suite's task count.
     cpus = int(
         os.environ.get("SPARK_GRAFT_TEST_CPUS")
         or min(8, int(os.environ.get("SPARK_GRAFT_CPUS") or "8"))
